@@ -43,11 +43,6 @@ class PipelineConfig:
     # (0 = disabled; partial aggregation alone handles mild skew).
     salt_buckets: int = 0
 
-    # dedup strategy: 'max_by' (groupBy + max_by: map-side partial agg,
-    # least shuffle) or 'window' (row_number; needed when we must keep
-    # all pre-images).
-    dedup_strategy: str = "max_by"
-
     # write mode: 'cow' rewrites affected buckets per epoch (cheap
     # reads); 'mor' appends delta files with tombstones and resolves at
     # read time (low write amplification for sparse-touch epochs).

@@ -5,20 +5,20 @@ WHEN MATCHED AND s.op='d' THEN DELETE / WHEN MATCHED THEN UPDATE /
 WHEN NOT MATCHED AND s.op!='d' THEN INSERT`` — executed as bucketed
 copy-on-write:
 
-1. in-batch dedup to one winner per key (B4, ``latest_events``);
-2. bucket pruning: only buckets containing incoming keys are read —
+1. bucket pruning: only buckets containing incoming keys are read —
    the single most important scale property (an epoch touching 0.1% of
    keys reads/writes ~0.1% of a 100 TB table, never the table);
-3. stored rows carry ``(_lsn, _op_rank)``, so merge = one more
-   ``max_by`` over (current ∪ batch) — a stored snapshot read at
+2. stored rows carry ``(_lsn, _op_rank)``, so in-batch dedup and the
+   merge are ONE winner resolution over (current ∪ batch)
+   (``functions.resolve_winners``) — a stored snapshot read at
    watermark W still loses to a late-arriving WAL event with lsn >= W,
    preserving reference conflict-resolution semantics across epochs;
-4. one atomic manifest swap commits data + schema evolution + the
+3. one atomic manifest swap commits data + schema evolution + the
    exactly-once commit key together.
 
-The apply shuffles each affected bucket's rows exactly once (the merge
-``max_by``) plus the batch dedup — no window over the whole table, no
-driver-side row loops.
+The apply shuffles each affected bucket's rows exactly once (the
+per-key max plus its hash join-back) — no window over the whole table,
+no driver-side row loops.
 """
 
 from __future__ import annotations
@@ -35,7 +35,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from debezium_partial_snapshotter_spark.functions import bucket_id, op_rank, salt
+from debezium_partial_snapshotter_spark.functions import (
+    bucket_id,
+    op_rank,
+    resolve_winners,
+)
 from debezium_partial_snapshotter_spark.operators.schema_evolution import (
     conform,
     merge_schemas,
@@ -74,7 +78,6 @@ def apply_batch(
     table: LakeTable,
     events: DataFrame,
     commit_key: str | None = None,
-    dedup_strategy: str = "max_by",
     salt_buckets: int = 0,
     write_mode: str = "cow",
     tie_guard: bool = False,
@@ -102,7 +105,44 @@ def apply_batch(
         UNclaimed partitions would be skipped forever (silent loss);
         the (lsn, op_rank) max-merge keeps re-applying the overlapping
         WAL events idempotent.
+
+    The stats carry ``retries`` (CommitConflict re-merges, at most
+    ``_merge_retries``) and ``tie_guard`` (whether the duplicate-delivery
+    guard ran, requested or after a detected tie).
     """
+    retries = 0
+    while True:
+        try:
+            stats = _merge_and_commit(
+                table, events, commit_key, salt_buckets, write_mode,
+                tie_guard, watermark_kind,
+            )
+        except CommitConflict:
+            # a concurrent writer committed into our buckets after we
+            # read them, or a rescale changed num_buckets under us: the
+            # merge is stale — re-plan, re-read and re-merge.
+            if retries >= _merge_retries:
+                raise
+            retries += 1
+            continue
+        if stats["applied"] != "invalid":
+            return {**stats, "retries": retries, "tie_guard": tie_guard}
+        # a genuine duplicate-delivery tie: redo with the guard on
+        tie_guard = True
+
+
+def _merge_and_commit(
+    table: LakeTable,
+    events: DataFrame,
+    commit_key: str | None,
+    salt_buckets: int,
+    write_mode: str,
+    tie_guard: bool,
+    watermark_kind: str,
+) -> dict:
+    """One attempt of :func:`apply_batch`. Raises CommitConflict when the
+    merge went stale; ``applied == "invalid"`` reports a tie detected
+    before the manifest swap."""
     t0 = time.time()
     spark = events.sparkSession
     if commit_key is not None and commit_key in table.committed_keys():
@@ -143,12 +183,10 @@ def apply_batch(
     merged = merge_schemas(cur_user, payload_schema)
     evolved = not schemas_equal(merged, cur_user)
 
-    # ---- 3+4. dedup and merge COLLAPSE into one max_by: max over
+    # ---- 3+4. dedup and merge COLLAPSE into one max: max over
     # (current ∪ raw batch) == max(current, max(batch)) — associativity
-    # makes the separate in-batch dedup pass (B4) and the MERGE conflict
-    # resolution one single shuffle. Partial aggregation compacts every
-    # key map-side, so a hot key ships O(map tasks) rows, not its event
-    # count.
+    # makes the separate in-batch dedup pass and the MERGE conflict
+    # resolution one single shuffle (resolve_winners).
     batch_cand = events.select(
         F.col("doc_id").alias("__key"),
         F.col("lsn").alias("_lsn"),
@@ -164,7 +202,7 @@ def apply_batch(
     if write_mode == "mor":
         # MoR: resolve within the batch only; global resolution happens
         # at read time (the reader's max covers any epoch ordering)
-        cur_cand = None
+        all_cand = batch_cand
     else:
         # Pin the version the merge is computed FROM — the commit below
         # passes it as read_version so a concurrent commit into the same
@@ -172,43 +210,13 @@ def apply_batch(
         # being silently overwritten by stale content.
         read_version = table.current_version()
         current = table.read(spark, buckets=affected, version=read_version)
-        cur_cand = conform(
+        all_cand = conform(
             current.withColumn("_is_delete", F.lit(False)),
             with_candidates_schema(merged),
-        )
+        ).unionByName(batch_cand)
 
-    # The conflict order (lsn, op_rank) is encoded as ONE BIGINT
-    # (lsn*4 + rank, rank < 4): a primitive max per key compiles to
-    # whole-stage-codegen HashAggregate with map-side combine. A
-    # struct-ordered max_by would force SortAggregate — full sorts of
-    # wide token-array rows on both shuffle sides, which measured 3-5x
-    # slower AND anti-scaled with cores (memory-bandwidth bound).
-    all_cand = (
-        batch_cand if cur_cand is None else cur_cand.unionByName(batch_cand)
-    ).withColumn("_ord", F.col("_lsn") * 4 + F.col("_op_rank"))
-    if salt_buckets and salt_buckets > 1:
-        # two-phase salted max for pathological hot keys (primitive agg
-        # already combines map-side; this additionally bounds
-        # reduce-side rows per key to salt_buckets)
-        maxes = (
-            all_cand.withColumn("_salt", salt(F.col("_lsn"), salt_buckets))
-            .groupBy("doc_id", "_salt")
-            .agg(F.max("_ord").alias("_mx"))
-            .groupBy("doc_id")
-            .agg(F.max("_mx").alias("_mx"))
-        )
-    else:
-        maxes = all_cand.groupBy("doc_id").agg(F.max("_ord").alias("_mx"))
-    # join the winning (key, ord) back to its full row. maxes is narrow
-    # (two longs per key) — AQE upgrades this to a broadcast join when it
-    # fits; the SHUFFLE_HASH hint pins the fallback to ShuffledHashJoin
-    # (without it the static planner picks SortMergeJoin, which sorts the
-    # wide token-array side — the exact plan this formulation avoids).
     obs_keys = Observation()
-    maxes = maxes.observe(obs_keys, F.count(F.lit(1)).alias("n_keys"))
-    winners = all_cand.join(maxes.hint("SHUFFLE_HASH"), "doc_id").where(
-        F.col("_ord") == F.col("_mx")
-    )
+    winners = resolve_winners(all_cand, "doc_id", salt_buckets, observe=obs_keys)
     if tie_guard:
         # a duplicate-delivered event ties with itself (same key, same
         # lsn, same rank, identical content) — keep exactly one copy.
@@ -218,9 +226,7 @@ def apply_batch(
         # retrying with the guard on only when a tie actually occurred.
         winners = winners.dropDuplicates(["doc_id"])
     obs_pre = Observation()
-    winners = winners.drop("_ord", "_mx").observe(
-        obs_pre, F.count(F.lit(1)).alias("n_rows")
-    )
+    winners = winners.observe(obs_pre, F.count(F.lit(1)).alias("n_rows"))
 
     obs = Observation()
 
@@ -248,50 +254,32 @@ def apply_batch(
             # extra job, edge case only — never the hot path)
             global OBSERVATION_FALLBACKS
             OBSERVATION_FALLBACKS += 1
-            return winners.count() == maxes.count()
+            return winners.count() == winners.select("doc_id").distinct().count()
 
     # ---- 5. atomic commit (data + schema + commit key + watermark)
-    wm_kwargs = (
-        {"watermark_lsn": batch_watermark}
-        if watermark_kind == "wal"
-        else {"snapshot_lsn": batch_watermark}
+    commit_kwargs = dict(
+        affected_buckets=affected,
+        commit_key=commit_key,
+        new_schema=with_system(merged) if evolved else None,
+        validate=validate,
+        expected_num_buckets=nb,
+        expected_layout=layout,
+        # snapshot keys are pinned: their events escape the
+        # lsn > watermark replay filter, so only the key blocks a very
+        # late redelivery (see lake.MAX_COMMIT_KEYS)
+        pin_key=watermark_kind == "snapshot",
+        **(
+            {"watermark_lsn": batch_watermark}
+            if watermark_kind == "wal"
+            else {"snapshot_lsn": batch_watermark}
+        ),
     )
     if write_mode == "mor":
         # keep tombstones: a delta delete must shadow older base rows
         new_content = winners.withColumn("_bucket", bexpr).observe(
             obs, F.count(F.lit(1)).alias("rows_live")
         )
-        try:
-            applied = table.append_deltas(
-                new_content,
-                affected_buckets=affected,
-                commit_key=commit_key,
-                new_schema=with_system(merged) if evolved else None,
-                validate=validate,
-                expected_num_buckets=nb,
-                expected_layout=layout,
-                # snapshot keys are pinned: their events escape the
-                # lsn > watermark replay filter, so only the key blocks
-                # a very late redelivery (see lake.MAX_COMMIT_KEYS)
-                pin_key=watermark_kind == "snapshot",
-                **wm_kwargs,
-            )
-        except CommitConflict:
-            # concurrent rescale: this batch was bucketed under a stale
-            # num_buckets — recompute under the new layout
-            if _merge_retries <= 0:
-                raise
-            return apply_batch(
-                table,
-                events,
-                commit_key=commit_key,
-                dedup_strategy=dedup_strategy,
-                salt_buckets=salt_buckets,
-                write_mode=write_mode,
-                tie_guard=tie_guard,
-                watermark_kind=watermark_kind,
-                _merge_retries=_merge_retries - 1,
-            )
+        applied = table.append_deltas(new_content, **commit_kwargs)
     else:
         new_content = (
             winners.where(~F.col("_is_delete"))
@@ -299,50 +287,12 @@ def apply_batch(
             .withColumn("_bucket", bexpr)
             .observe(obs, F.count(F.lit(1)).alias("rows_live"))
         )
-        try:
-            applied = table.replace_buckets(
-                new_content,
-                affected_buckets=affected,
-                commit_key=commit_key,
-                new_schema=with_system(merged) if evolved else None,
-                validate=validate,
-                read_version=read_version,
-                expected_num_buckets=nb,
-                expected_layout=layout,
-                pin_key=watermark_kind == "snapshot",
-                **wm_kwargs,
-            )
-        except CommitConflict:
-            # a concurrent writer committed into our buckets after we
-            # read them (or a rescale changed num_buckets under us):
-            # the merge is stale — re-read and re-merge.
-            if _merge_retries <= 0:
-                raise
-            return apply_batch(
-                table,
-                events,
-                commit_key=commit_key,
-                dedup_strategy=dedup_strategy,
-                salt_buckets=salt_buckets,
-                write_mode=write_mode,
-                tie_guard=tie_guard,
-                watermark_kind=watermark_kind,
-                _merge_retries=_merge_retries - 1,
-            )
+        applied = table.replace_buckets(
+            new_content, read_version=read_version, **commit_kwargs
+        )
 
     if applied == "invalid":
-        # a genuine duplicate-delivery tie: redo with the guard on
-        return apply_batch(
-            table,
-            events,
-            commit_key=commit_key,
-            dedup_strategy=dedup_strategy,
-            salt_buckets=salt_buckets,
-            write_mode=write_mode,
-            tie_guard=True,
-            watermark_kind=watermark_kind,
-            _merge_retries=_merge_retries,
-        )
+        return {"applied": applied}
     wall = time.time() - t0
     live = _obs_get(obs) if applied else None
     return {

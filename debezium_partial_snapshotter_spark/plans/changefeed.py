@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
+from debezium_partial_snapshotter_spark.functions import resolve_winners
 from debezium_partial_snapshotter_spark.plans.lake import (
     LakeTable,
     VersionExpiredError,
@@ -75,7 +76,8 @@ class IneligibleRangeError(Exception):
     contains a commit that is neither a pure delta append nor
     content-neutral (a copy-on-write rewrite, a bucket split, or a
     LEGACY pre-marker compaction; marked compactions are skipped —
-    see ``_delta_plan``)."""
+    see ``_delta_plan``), or it spans more epochs than the reader's
+    ``max_delta_epochs`` eligibility-walk cap. The message says which."""
 
 
 @dataclass
@@ -330,14 +332,17 @@ class ChangefeedReader:
             # straight to the fallback (the net resolve is
             # O(changed buckets) regardless of how far behind)
             files = None
+            why = (
+                f"spans {n_epochs} epochs, more than max_delta_epochs="
+                f"{self.max_delta_epochs}"
+            )
         else:
             chain = self._chain(from_v, to_v)
             files = self._delta_plan(from_v, chain)
+            why = "contains a non-delta commit"
         if files is None:
             if on_ineligible == "error":
-                raise IneligibleRangeError(
-                    f"({from_v}, {to_v}] contains a non-delta commit"
-                )
+                raise IneligibleRangeError(f"({from_v}, {to_v}] {why}")
             net = self.table.read_changes(spark, from_v, to_v)
             # Same upsert/delete shape the fast path produces: deletes
             # get NULL payload (tombstone shape). The net feed's delete
@@ -389,22 +394,12 @@ class ChangefeedReader:
             + [StructField("_is_delete", BooleanType(), False)]
         )
         deltas = self.table._read_files(spark, files, delta_schema)
-        # winner per key across the polled epochs: same primitive-max +
-        # SHUFFLE_HASH join-back as the MoR resolve (sort-free; rows are
-        # tie-free across commits by construction — see _resolve_mor's
-        # proof). One groupBy over O(batch) rows; single-epoch polls
-        # reduce to a pass-through since apply already wrote one winner
-        # per key.
-        allc = deltas.withColumn(
-            "_mord", F.col("_lsn") * 4 + F.col("_op_rank")
-        )
-        maxes = allc.groupBy(key).agg(F.max("_mord").alias("_mmx"))
-        resolved = (
-            allc.join(maxes.hint("SHUFFLE_HASH"), key)
-            .where(F.col("_mord") == F.col("_mmx"))
-            .drop("_mord", "_mmx")
-        )
-        df = resolved.select(
+        # winner per key across the polled epochs: the MoR resolve's
+        # kernel (rows are tie-free across commits by construction — see
+        # _resolve_mor's proof). One groupBy over O(batch) rows;
+        # single-epoch polls reduce to a pass-through since apply
+        # already wrote one winner per key.
+        df = resolve_winners(deltas, key).select(
             *[f.name for f in sch.fields],
             F.when(F.col("_is_delete"), F.lit("delete"))
             .otherwise(F.lit("upsert"))
@@ -514,14 +509,8 @@ def apply_feed(
             for f in sch.fields
         ],
         (F.col("_change_type") == "delete").alias("_is_delete"),
-    ).withColumn("_mord", F.col("_lsn") * 4 + F.col("_op_rank"))
-    maxes = winners.groupBy(key).agg(F.max("_mord").alias("_mmx"))
-    winners = (
-        winners.join(maxes.hint("SHUFFLE_HASH"), key)
-        .where(F.col("_mord") == F.col("_mmx"))
-        .drop("_mord", "_mmx")
-        .withColumn("_bucket", bexpr)
     )
+    winners = resolve_winners(winners, key).withColumn("_bucket", bexpr)
     # Affected buckets come from a NARROW pass over the feed key, not
     # from `winners`: the resolve keeps >= 1 row per key, so the
     # winners' bucket set IS the feed keys' bucket set — and collecting

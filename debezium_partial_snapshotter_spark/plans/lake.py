@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
+from debezium_partial_snapshotter_spark.functions import bucket_id, resolve_winners
+
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 
@@ -102,8 +104,8 @@ def _atomic_create(tmp_path: str, final_path: str) -> bool:
 
 def _resolve_mor(base: DataFrame, deltas: DataFrame, key: str = "doc_id") -> DataFrame:
     """Winner per key by (_lsn, _op_rank) over (base ∪ deltas), keeping
-    delete tombstones until the caller drops them. Same sort-free plan
-    as the apply merge: primitive max + SHUFFLE_HASH join-back.
+    delete tombstones until the caller drops them. Same sort-free kernel
+    as the apply merge (``resolve_winners``).
 
     No tie guard: stored rows are tie-free BY CONSTRUCTION, so the
     join-back yields exactly one row per key. Proof: (a) within one
@@ -123,15 +125,7 @@ def _resolve_mor(base: DataFrame, deltas: DataFrame, key: str = "doc_id") -> Dat
     stands between a late snapshot redelivery and tied delta rows. A round-1 dropDuplicates
     here compiled to SortAggregate over wide token rows on EVERY
     delta-bucket read — the exact plan the write path paid to remove."""
-    allc = base.unionByName(deltas).withColumn(
-        "_mord", F.col("_lsn") * 4 + F.col("_op_rank")
-    )
-    maxes = allc.groupBy(key).agg(F.max("_mord").alias("_mmx"))
-    resolved = (
-        allc.join(maxes.hint("SHUFFLE_HASH"), key)
-        .where(F.col("_mord") == F.col("_mmx"))
-        .drop("_mord", "_mmx")
-    )
+    resolved = resolve_winners(base.unionByName(deltas), key)
     return resolved.where(~F.col("_is_delete"))
 
 
@@ -290,8 +284,6 @@ class LakeTable:
         )
 
     def _bucket_expr_of(self, man: dict, key: "F.Column"):
-        from debezium_partial_snapshotter_spark.functions import bucket_id
-
         nb = man["num_buckets"]
         rs = man.get("rescale")
         if not rs or not rs.get("done"):
@@ -840,7 +832,6 @@ class LakeTable:
         routing with the transitional expression while clearing the
         transition would strand rows in above-``nb`` entries that
         later merge writers never replace."""
-        from debezium_partial_snapshotter_spark.functions import bucket_id
 
         for attempt in range(max_retries):
             man = self.manifest()
@@ -884,7 +875,6 @@ class LakeTable:
         tracker (stale rows for vanished buckets are never discovered
         again). At 100 TB this is the escape hatch when buckets outgrow
         executor memory: double num_buckets, one table-scan-sized job."""
-        from debezium_partial_snapshotter_spark.functions import bucket_id
 
         for attempt in range(max_retries):
             base_version = self.current_version()
@@ -991,7 +981,6 @@ class LakeTable:
         concurrently without conflict. At 100 TB this replaces the
         table-sized offline rewrite with num_buckets independent
         bucket-sized commits interleaved with live ingest."""
-        from debezium_partial_snapshotter_spark.functions import bucket_id
 
         b = int(bucket)
         for attempt in range(max_retries):

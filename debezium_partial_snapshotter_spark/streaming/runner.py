@@ -1,54 +1,31 @@
-"""PartialIngestRunner — the engine's lifecycle orchestrator.
+"""PartialIngestRunner — the lifecycle of ``streaming.multi`` run for
+the one table ``cfg.target_table``.
 
-Spark re-expression of the reference connector's phase machine
-(SURVEY.md §3.1/§3.3):
+The phases (bootstrap, catch-up, snapshot epoch, tail, streaming tail)
+and their exactly-once rules live in :class:`MultiTableIngestRunner`.
+This view keeps the one-table surface, so existing warehouses resume
+unchanged:
 
-1. **bootstrap** — open/create tracker (A3); decide record-only mode
-   (A9: ``skip_existing_connector`` and tracker-fresh-or-unseen,
-   ``PostgresJdbcFilterHandler.java:64-68``).
-2. **catch-up** — replay WAL written while the pipeline was down,
-   BEFORE any new partial snapshot (B3; pinned by
-   ``PartialSnapshotterTest.java:183-237``).
-3. **snapshot epoch** — claim needs-snapshot partitions atomically
-   (A1/A4-A6), bounded scan of ONLY those buckets tagged 'r' at the
-   snapshot watermark (B1), apply, then bulk release (A7). The
-   reference infers snapshot-end by counting shouldStream() calls on
-   old engines (A11 — a self-described HACK); here the phase machine is
-   explicit.
-4. **tail** — Structured Streaming over the change-event feed with
-   ``foreachBatch`` apply (B2); exactly-once = checkpoint (deterministic
-   batch replay) + idempotent commit keys in the target manifest (B6)
-   + a global LSN high-watermark filter, so re-reads after checkpoint
-   loss cannot resurrect deleted keys or double-apply.
-
-Epoch numbering is monotonic across restarts (resumed from the commit
-log); each epoch writes lineage/metrics rows (B9).
+- flat stats dicts (no per-table nesting);
+- commit keys ``pid:phase:epoch`` and ``pid:stream:batch_id``, without a
+  table suffix;
+- the ``_metrics/<target_table>`` and ``_commit_log/<target_table>``
+  logs, with per-bucket lineage rows plus an epoch-total row under
+  partition ``*``;
+- no shared-WAL routing: the source feeds this table only.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from debezium_partial_snapshotter_spark.config import PipelineConfig
-from debezium_partial_snapshotter_spark.operators.upsert import (
-    apply_batch,
-    empty_table_for,
-)
-from debezium_partial_snapshotter_spark.plans.lake import LakeTable
-from debezium_partial_snapshotter_spark.plans.metrics import (
-    COMMIT_LOG_ARROW,
-    METRICS_ARROW,
-    AppendLog,
-)
-from debezium_partial_snapshotter_spark.plans.tracker import SnapshotTracker
 from debezium_partial_snapshotter_spark.schemas import TOKENS_SCHEMA
 from debezium_partial_snapshotter_spark.sources.readers import ParquetWalSource
+from debezium_partial_snapshotter_spark.streaming.multi import MultiTableIngestRunner
 
 
-class PartialIngestRunner:
+class PartialIngestRunner(MultiTableIngestRunner):
     def __init__(
         self,
         spark: SparkSession,
@@ -61,324 +38,48 @@ class PartialIngestRunner:
         LakeTable contract (tests/test_sink_contract.py pins it) —
         e.g. plans.iceberg.IcebergTable on a real cluster. Default:
         a LakeTable under cfg.target_path."""
-        self.spark = spark
-        self.cfg = cfg
-        self.source = source
-        tracker_existed = SnapshotTracker(cfg.tracker_path).exists()
-        self.tracker = SnapshotTracker.create(cfg.tracker_path)
-        # A9 record-only decision (PostgresJdbcFilterHandler.java:64-68):
-        # skip flag AND (tracker fresh OR this pipeline unseen)
-        self.record_only = cfg.skip_existing_connector and (
-            not tracker_existed
-            or not self.tracker.connector_is_tracked(cfg.pipeline_id)
+        t = cfg.target_table
+        super().__init__(
+            spark, cfg, {t: source}, payload_schema,
+            tables=None if table is None else {t: table},
         )
-        self.table = table if table is not None else empty_table_for(
-            cfg.target_path, payload_schema, num_buckets=cfg.num_buckets
-        )
-        self.metrics = AppendLog(cfg.metrics_path, METRICS_ARROW)
-        self.commit_log = AppendLog(cfg.commit_log_path, COMMIT_LOG_ARROW)
-        self._epoch = self._resume_epoch()
-        self._applies_since_expire = 0  # cfg.expire_keep_last cadence
 
-    # ------------------------------------------------------------ helpers
-    def _resume_epoch(self) -> int:
-        """Monotonic epoch resume. The commit log alone is NOT enough:
-        a crash between the manifest swap and the commit-log append
-        leaves the key committed in the MANIFEST but the epoch missing
-        from the log — resuming from the log would reuse the stale key,
-        apply_batch would return duplicate_commit_key forever, and
-        ingest would silently stall. Resume from the max of both."""
-        df = self.commit_log.read_pandas()
-        mine = df[df["pipeline_id"] == self.cfg.pipeline_id]
-        log_epoch = int(mine["checkpoint_epoch"].max()) if len(mine) else -1
-        man_epoch = -1
-        prefix = f"{self.cfg.pipeline_id}:"
-        for key in self.table.committed_keys():
-            if not key.startswith(prefix):
-                continue
-            parts = key.split(":")
-            # pipeline:phase:epoch (stream keys are pipeline:stream:batch_id
-            # — those are checkpoint-scoped, not epoch-scoped; skip them)
-            if len(parts) == 3 and parts[1] in ("catchup", "snapshot", "tail"):
-                try:
-                    man_epoch = max(man_epoch, int(parts[2]))
-                except ValueError:
-                    pass
-        return max(log_epoch, man_epoch) + 1
+    @property
+    def table(self):
+        return self.tables[self.cfg.target_table]
 
-    def _fresh_key(self, phase: str) -> str:
-        """Commit key for the current epoch, skipping over any epoch
-        whose key is already in the manifest (belt-and-braces against
-        the crash window _resume_epoch describes)."""
-        committed = self.table.committed_keys()
-        key = f"{self.cfg.pipeline_id}:{phase}:{self._epoch}"
-        while key in committed:
-            self._epoch += 1
-            key = f"{self.cfg.pipeline_id}:{phase}:{self._epoch}"
-        return key
+    @property
+    def source(self):
+        return self.sources[self.cfg.target_table]
 
-    def discovered_partitions(self) -> list[str]:
-        """The set of (table, bucket) work units — the analog of
-        Debezium's monitored-tables discovery, with B7 include/exclude
-        regex filtering applied here, BEFORE any scan is planned (the
-        tracker itself is never in the data plane)."""
-        import re
+    @source.setter
+    def source(self, source) -> None:
+        self.sources[self.cfg.target_table] = source
 
-        t = self.cfg.target_table
-        parts = [f"{t}/{b:04d}" for b in range(self.cfg.num_buckets)]
-        if self.cfg.partition_include:
-            inc = re.compile(self.cfg.partition_include)
-            parts = [p for p in parts if inc.search(p)]
-        if self.cfg.partition_exclude:
-            exc = re.compile(self.cfg.partition_exclude)
-            parts = [p for p in parts if not exc.search(p)]
-        return parts
+    def _log_name(self) -> str:
+        return self.cfg.target_table
 
-    @staticmethod
-    def buckets_of(partitions: list[str]) -> list[int]:
-        return sorted(int(p.rsplit("/", 1)[1]) for p in partitions)
+    def _key(self, phase: str, n, table: str) -> str:
+        return f"{self.cfg.pipeline_id}:{phase}:{n}"
 
-    def _record(self, phase: str, epoch: int, stats: dict, rows_read: int | None = None):
-        wall = max(stats.get("wall_ms") or 1, 1)
-        applied = stats.get("rows_live")
-        rows_read = rows_read if rows_read is not None else stats.get("batch_keys")
-        t = self.cfg.target_table
-        # per-partition lineage (north rule) + one epoch-total row
-        rows = [
-            {
-                "epoch": epoch,
-                "partition": f"{t}/{b:04d}",
-                "phase": phase,
-                "rows_read": n,
-                "rows_applied": None,
-                "events_per_sec": None,
-                "wall_ms": wall,
-                "watermark_lsn": stats.get("watermark_lsn"),
-            }
-            for b, n in (stats.get("bucket_rows") or {}).items()
-        ]
-        rows.append(
-            {
-                "epoch": epoch,
-                "partition": "*",
-                "phase": phase,
-                "rows_read": rows_read,
-                "rows_applied": int(applied) if applied is not None else None,
-                "events_per_sec": (rows_read or 0) / (wall / 1000.0),
-                "wall_ms": wall,
-                "watermark_lsn": stats.get("watermark_lsn"),
-            }
-        )
-        self.metrics.append(rows)
-        if stats.get("applied"):
-            self.commit_log.append(
-                [
-                    {
-                        "pipeline_id": self.cfg.pipeline_id,
-                        "checkpoint_epoch": epoch,
-                        "commit_key": stats.get("commit_key"),
-                        "phase": phase,
-                        "batch_keys": stats.get("batch_keys"),
-                        "watermark_lsn": stats.get("watermark_lsn"),
-                        "table_version": self.table.current_version(),
-                        "committed_at": time.time(),
-                    }
-                ]
-            )
+    def _route(self, events: DataFrame, table: str) -> DataFrame:
+        return events
 
-    def _apply(self, events: DataFrame, phase: str, commit_key: str) -> dict:
-        stats = apply_batch(
-            self.table,
-            events,
-            commit_key=commit_key,
-            dedup_strategy=self.cfg.dedup_strategy,
-            salt_buckets=self.cfg.salt_buckets,
-            write_mode=self.cfg.write_mode,
-            watermark_kind="snapshot" if phase == "snapshot" else "wal",
-        )
-        stats["commit_key"] = commit_key
-        if (
-            stats.get("applied")
-            and self.cfg.write_mode == "mor"
-            and self.table.delta_stats()["delta_files"]
-            >= self.cfg.mor_compact_threshold
-        ):
-            stats["compaction"] = self.table.compact(self.spark)
-        if stats.get("applied") and self.cfg.expire_keep_last:
-            # storage reclamation rides the ingest loop (round 5): every
-            # expire_every_applies applied batches, superseded versions
-            # (including the bases a compaction just folded) give their
-            # files back — without it one CoW commit per epoch strands
-            # ~a touched-table copy per epoch forever
-            self._applies_since_expire += 1
-            if self._applies_since_expire >= self.cfg.expire_every_applies:
-                self._applies_since_expire = 0
-                stats["expiration"] = self.table.expire_versions(
-                    keep_last=self.cfg.expire_keep_last,
-                    min_age_sec=self.cfg.expire_min_age_sec,
-                    orphan_grace_sec=self.cfg.expire_orphan_grace_sec,
-                )
-        return stats
+    def _total_partition(self, table: str) -> str:
+        return "*"
 
-    # ------------------------------------------------------------- phases
     def catchup(self) -> dict:
-        """B3 — drain the WAL backlog before any snapshot work. Only
-        events past the table's LSN high watermark apply (idempotent
-        under overlapping re-reads)."""
-        key = self._fresh_key("catchup")
-        epoch = self._epoch
-        wm = self.table.watermark_lsn()
-        # since_lsn pushes the watermark into the SOURCE (JDBC: rows
-        # never leave the database); the outer where is a no-op guard
-        # for sources that ignore the parameter
-        events = self.source.wal_batch(since_lsn=wm).where(
-            F.col("lsn") > F.lit(wm)
-        )
-        stats = self._apply(events, "catchup", key)
-        if stats.get("applied"):
-            self._record("catchup", epoch, stats)
-            self._epoch += 1
-        return stats
+        return super().catchup()[self.cfg.target_table]
 
     def snapshot_epoch(self) -> dict:
-        """The partial-snapshot pass: claim -> bounded scan of claimed
-        buckets only -> apply -> release (A1-A7, B1)."""
-        # crash-resume: partitions still marked under_snapshot belong to
-        # an epoch that died between claim and release — finish THAT
-        # epoch at ITS recorded watermark (one consistency point per
-        # epoch); already-committed work is skipped by its commit key.
-        mine = self.tracker.state(self.cfg.pipeline_id)
-        stale = mine[mine["under_snapshot"]] if len(mine) else mine
-        if len(stale):
-            epoch = int(stale["updated_epoch"].min())
-            resumed_watermark = int(stale["watermark_lsn"].max())
-            key = f"{self.cfg.pipeline_id}:snapshot:{epoch}"
-        else:
-            key = self._fresh_key("snapshot")
-            epoch = self._epoch
-            resumed_watermark = None
-        try:
-            discovered = self.discovered_partitions()
-            # the snapshot consistency point: at least the source's WAL
-            # head, STRICTLY above everything already applied AND above
-            # every previous snapshot watermark — a re-snapshot re-reads
-            # the source and must beat rows stored by a previous snapshot
-            # at the same LSN (reference: testResnapshotPartial), while
-            # still losing (op-rank) to WAL events at lsn >= watermark
-            # that arrive later. snapshot_lsn (not watermark_lsn) keeps
-            # this monotonic: partial snapshots do NOT advance the WAL
-            # replay filter (see apply_batch watermark_kind).
-            watermark = (
-                resumed_watermark
-                if resumed_watermark is not None
-                else max(
-                    self.source.current_lsn(),
-                    self.table.watermark_lsn() + 1,
-                    self.table.snapshot_lsn() + 1,
-                )
-            )
-            claimed = self.tracker.claim(
-                discovered,
-                self.cfg.pipeline_id,
-                record_only=self.record_only,
-                watermark_lsn=watermark,
-                epoch=epoch,
-            )
-        except Exception:
-            # fail-safe policy (reference: SQLException -> skip,
-            # PostgresJdbcFilterHandler.java:142-145; threaded timeout ->
-            # snapshot, ThreadedSnapshotFilter.java:51-58)
-            if self.cfg.on_tracker_error == "fail":
-                raise
-            if self.cfg.on_tracker_error == "snapshot":
-                claimed = self.discovered_partitions()
-                watermark = max(
-                    self.source.current_lsn(),
-                    self.table.watermark_lsn() + 1,
-                    self.table.snapshot_lsn() + 1,
-                )
-            else:  # skip
-                return {"applied": False, "reason": "tracker_error_skip"}
-
-        if not claimed:
-            # nothing needs a snapshot: still release any stale claims
-            self.tracker.release(self.cfg.pipeline_id, epoch=epoch)
-            return {"applied": False, "reason": "nothing_claimed", "claimed": []}
-
-        events = self.source.snapshot(self.buckets_of(claimed), watermark)
-        stats = self._apply(events, "snapshot", key)
-        self.tracker.release(self.cfg.pipeline_id, epoch=epoch)
-        stats["claimed"] = claimed
-        stats["snapshot_watermark"] = watermark
-        if stats.get("applied"):
-            self._record("snapshot", epoch, stats)
-            self._epoch = max(self._epoch, epoch + 1)
-        return stats
+        out = super().snapshot_epoch()
+        if "tables" not in out:
+            return out
+        return {
+            **out["tables"][self.cfg.target_table],
+            "claimed": out["claimed"],
+            "snapshot_watermark": out["snapshot_watermark"],
+        }
 
     def tail_batch(self, events: DataFrame | None = None) -> dict:
-        """One bounded tail epoch (micro-batch outside Structured
-        Streaming — used by tests and the bench replay loop)."""
-        key = self._fresh_key("tail")
-        epoch = self._epoch
-        wm = self.table.watermark_lsn()
-        polled = events is None
-        if events is None:
-            events = self.source.wal_batch(since_lsn=wm)
-        events = events.where(F.col("lsn") > F.lit(wm))
-        stats = self._apply(events, "tail", key)
-        # dead-letter visibility (VERDICT r3 next-5): sources with a
-        # quarantine sink report how many envelopes this batch rejected
-        # — callers/dashboards see drops per epoch, not just in the
-        # source's own _batches log. Only when THIS call polled the
-        # source: with caller-supplied events, last_quarantined belongs
-        # to some earlier poll and attributing it here double-counts.
-        q = getattr(self.source, "last_quarantined", None)
-        if polled and q is not None:
-            stats["rows_quarantined"] = q
-        if stats.get("applied"):
-            self._record("tail", epoch, stats)
-            self._epoch += 1
-        return stats
-
-    # ---------------------------------------------------------- lifecycle
-    def start(self) -> dict:
-        """Full startup sequence: catch-up replay, then partial
-        snapshot (order pinned by the reference's
-        testReplayRecordsDuringResnapshot)."""
-        out = {"catchup": self.catchup(), "snapshot": self.snapshot_epoch()}
-        return out
-
-    def stream(
-        self,
-        process_all_available: bool = True,
-        timeout_sec: float | None = 120.0,
-    ):
-        """B2 — Structured Streaming tail: readStream over the log dir,
-        foreachBatch -> the same idempotent apply. Exactly-once:
-        checkpointed source offsets give deterministic batch replay;
-        the manifest commit key dedupes a re-delivered batch; the LSN
-        high-watermark filter covers checkpoint-less re-reads."""
-        runner = self
-
-        def handle(batch_df: DataFrame, batch_id: int):
-            wm = runner.table.watermark_lsn()
-            filtered = batch_df.where(F.col("lsn") > F.lit(wm))
-            key = f"{runner.cfg.pipeline_id}:stream:{batch_id}"
-            epoch = runner._epoch
-            stats = runner._apply(filtered, "tail", key)
-            if stats.get("applied"):
-                runner._record("tail", epoch, stats)
-                runner._epoch += 1
-
-        q = (
-            self.source.wal_stream(self.cfg.max_files_per_trigger)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", self.cfg.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if process_all_available:
-            q.awaitTermination(timeout_sec)
-            if q.isActive:
-                q.stop()
-        return q
+        return super().tail_batch(events)[self.cfg.target_table]

@@ -21,7 +21,7 @@ operators"):
   envelope's ``after`` struct should be flattened upstream.
 
 This is deliberately the escape hatch: for bounded feeds the stateless
-``latest_events`` (primitive max + hash join) is cheaper — use this
+``functions.resolve_winners`` (primitive max + hash join) is cheaper — use this
 only when suppression must happen ACROSS micro-batches, which no
 built-in stateless operator can express.
 """
@@ -67,7 +67,7 @@ def latest_events_stateful(
     - **at most n_salt rows per key per batch** reach the sink (one
       per salt that advanced), instead of exactly one. The cross-salt
       final merge is the sink apply's existing per-key (lsn, op_rank)
-      winner resolution (operators/dedup.py B4) — the same place the
+      winner resolution (functions.resolve_winners, B4) — the same place the
       batch salted aggregate puts its second phase — so the APPLIED
       state is identical to the unsalted path's (pinned by
       tests/test_stateful.py::test_stateful_salted_equivalence_hot_key).

@@ -254,6 +254,7 @@ def test_apply_batch_remerges_on_conflict(spark, tmp_warehouse):
     stats = apply_batch(table, ours, commit_key="p1:0")
     table.replace_buckets = orig
     assert stats["applied"] is True
+    assert stats["retries"] == 1  # one CommitConflict re-merge
 
     got = {
         r["doc_id"]: list(r["tokens"])

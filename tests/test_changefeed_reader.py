@@ -268,7 +268,7 @@ def test_cow_commit_in_range_falls_back_to_net(spark, tmp_warehouse):
     pq.write_table(seg, os.path.join(d, "s.parquet"))
     apply_batch(table, load_events(spark, d), commit_key="cow:1",
                 write_mode="cow")
-    with pytest.raises(IneligibleRangeError):
+    with pytest.raises(IneligibleRangeError, match="contains a non-delta commit"):
         r.poll(spark, mode="delta", on_ineligible="error")
     b = r.poll(spark, mode="delta")  # default fallback: derive from net
     assert not b.fast_path
@@ -694,6 +694,13 @@ def test_far_behind_cursor_skips_manifest_walk(spark, tmp_warehouse):
         raise AssertionError("eligibility probe walked the chain")
 
     r._chain = no_walk  # the cap must skip the probe outright
+    # the error names the cap and the epoch count, not a non-delta commit
+    n = vs[-1] - vs[0]
+    with pytest.raises(
+        IneligibleRangeError,
+        match=rf"spans {n} epochs, more than max_delta_epochs=2$",
+    ):
+        r.poll(spark, mode="delta", on_ineligible="error")
     b = r.poll(spark, mode="delta")  # range spans 4 > 2 epochs
     assert b.fast_path is False
     assert b.epochs == vs[-1] - vs[0]
@@ -723,3 +730,49 @@ def test_commit_bootstrap_refuses_rewind(spark, tmp_warehouse):
     r._write_seq(r._seqs()[-1] + 1, boot.to_version + 5)
     with pytest.raises(ConcurrentConsumerError, match="advanced"):
         r.commit_bootstrap(boot)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_winner_merges_are_sort_free(spark, tmp_warehouse):
+    """The apply merge, the MoR read, the changefeed delta poll and
+    apply_feed all resolve winners with the same kernel: a primitive
+    HashAggregate max plus a ShuffledHashJoin back to the wide rows —
+    never a SortAggregate or a SortMergeJoin."""
+    table, vs = _build(spark, tmp_warehouse, write_mode="mor")
+    plans = {"mor_read": _plan(table.read(spark))}
+    r = ChangefeedReader(table, os.path.join(tmp_warehouse, "c"))
+    r.start(from_version=vs[1])
+    feed = r.poll(spark, mode="delta")
+    assert feed.fast_path
+    plans["delta_poll"] = _plan(feed.df)
+
+    def capture(target, method, name):
+        orig = getattr(target, method)
+
+        def hook(df, **kw):
+            plans[name] = _plan(df)
+            return orig(df, **kw)
+
+        setattr(target, method, hook)
+
+    cow = empty_table_for(
+        os.path.join(tmp_warehouse, "cow"), TOKENS_SCHEMA, num_buckets=NB
+    )
+    capture(cow, "replace_buckets", "apply_merge")
+    for i in (0, 1):  # the second apply merges against stored rows
+        events = load_events(spark, os.path.join(tmp_warehouse, f"e{i}"))
+        assert apply_batch(cow, events, commit_key=f"c:{i}")["applied"]
+    down = empty_table_for(
+        os.path.join(tmp_warehouse, "down"), TOKENS_SCHEMA, num_buckets=NB
+    )
+    capture(down, "append_deltas", "apply_feed")
+    assert apply_feed(down, feed.df, commit_key="d:0")
+
+    assert set(plans) == {"mor_read", "delta_poll", "apply_merge", "apply_feed"}
+    for name, plan in plans.items():
+        assert "HashAggregate" in plan, (name, plan)
+        assert "SortAggregate" not in plan, (name, plan)
+        assert "SortMergeJoin" not in plan, (name, plan)

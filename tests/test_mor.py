@@ -156,6 +156,7 @@ def test_duplicate_delivery_tie_fallback(spark, tmp_warehouse):
             table, load_events(spark, d), commit_key="p:0", write_mode=mode
         )
         assert stats["applied"] is True
+        assert stats["tie_guard"] is True  # the tie was detected and rerun
         expected = oracle_apply(wal)
         assert_state_matches(spark, table, expected)
 

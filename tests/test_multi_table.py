@@ -11,8 +11,10 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from debezium_partial_snapshotter_spark.config import PipelineConfig
+from debezium_partial_snapshotter_spark.plans.lake import VersionExpiredError
 from debezium_partial_snapshotter_spark.sources.eventlog import (
     EventLogSpec,
     generate_change_log,
@@ -31,15 +33,15 @@ NB = 4
 TABLES = {"alpha": (11, 1_000_000), "beta": (22, 5_000_000)}
 
 
-def _env(spark, wh):
+def _env(spark, wh, n_segments=2):
     """Two source tables sharing ONE WAL feed (interleaved segments)."""
     log_dir = os.path.join(wh, "source", "wal")
     os.makedirs(log_dir)
     specs, states, sources, wals = {}, {}, {}, {}
     for t, (seed, lsn0) in TABLES.items():
         spec = EventLogSpec(
-            n_docs=50, n_events=200, n_segments=2, seed=seed,
-            num_buckets=NB, table=t, start_lsn=lsn0,
+            n_docs=50, n_events=100 * n_segments, n_segments=n_segments,
+            seed=seed, num_buckets=NB, table=t, start_lsn=lsn0,
         )
         specs[t] = spec
         states[t] = generate_initial_state(spec)
@@ -50,9 +52,9 @@ def _env(spark, wh):
         )
         wals[t] = generate_change_log(spec)  # in-memory; written on demand
 
-    def write_shared_wal():
+    def write_shared_wal(segments=None):
         # interleave: each shared segment carries BOTH tables' events
-        for i in range(2):
+        for i in range(n_segments) if segments is None else segments:
             seg = pa.concat_tables([wals[t][i] for t in TABLES])
             pq.write_table(seg, os.path.join(log_dir, f"seg-{i:05d}.parquet"))
 
@@ -278,3 +280,60 @@ def test_multi_table_surfaces_quarantine_counts(spark, tmp_warehouse):
     out = runner.tail_batch()
     assert out["alpha"]["rows_quarantined"] == 3
     assert "rows_quarantined" not in out["beta"]
+
+
+def _expected(specs, states, t):
+    spec = specs[t]
+    return oracle_apply(
+        [snapshot_read_events(states[t], spec.start_lsn, spec)]
+        + generate_change_log(spec)
+    )
+
+
+def test_multi_table_mor_compacts_every_tail_epoch(spark, tmp_warehouse):
+    """MoR maintenance runs on the multi-table path too: each tail epoch
+    appends up to NB delta files per table, and compaction at
+    mor_compact_threshold keeps every table below threshold + NB —
+    without it the count grows by ~NB every epoch."""
+    n_seg = 7
+    specs, states, sources, write_shared_wal = _env(
+        spark, tmp_warehouse, n_segments=n_seg
+    )
+    runner, _ = _runner(
+        spark, tmp_warehouse, sources, write_mode="mor", mor_compact_threshold=6
+    )
+    assert runner.start()["snapshot"]["applied"]
+    compactions = 0
+    for i in range(n_seg):
+        write_shared_wal([i])
+        out = runner.tail_batch()
+        for t in TABLES:
+            assert out[t]["applied"], out[t]
+            compactions += "compaction" in out[t]
+            assert runner.tables[t].delta_stats()["delta_files"] < 6 + NB
+    assert compactions > 0
+    for t in TABLES:
+        assert_state_matches(spark, runner.tables[t], _expected(specs, states, t))
+
+
+def test_multi_table_snapshot_epoch_expires(spark, tmp_warehouse):
+    """Expiration rides every apply path, the snapshot epoch included:
+    with keep_last=1 and a cadence of one apply, the snapshot commit
+    already reclaims the creation version of each table."""
+    specs, states, sources, write_shared_wal = _env(spark, tmp_warehouse)
+    runner, _ = _runner(
+        spark, tmp_warehouse, sources, expire_keep_last=1,
+        expire_every_applies=1, expire_min_age_sec=0.0,
+        expire_orphan_grace_sec=0.0,
+    )
+    out = runner.snapshot_epoch()
+    assert out["applied"]
+    for t in TABLES:
+        assert "expiration" in out["tables"][t], out["tables"][t]
+        with pytest.raises(VersionExpiredError):
+            runner.tables[t].read(spark, version=1)
+    write_shared_wal()
+    tail = runner.tail_batch()
+    for t in TABLES:
+        assert "expiration" in tail[t], tail[t]
+        assert_state_matches(spark, runner.tables[t], _expected(specs, states, t))

@@ -10,6 +10,7 @@ import os
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 
 from debezium_partial_snapshotter_spark.operators.upsert import (
     apply_batch,
@@ -142,7 +143,12 @@ def test_idempotent_redelivery(spark, tmp_warehouse):
 
 
 def test_dedup_strategies_agree(spark, tmp_warehouse):
-    from debezium_partial_snapshotter_spark.operators.dedup import latest_events
+    """resolve_winners, unsalted and salted, picks the same winner per
+    key as a row_number() window over (lsn desc, op_rank desc)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from debezium_partial_snapshotter_spark.functions import op_rank, resolve_winners
 
     spec = EventLogSpec(n_docs=50, n_events=800, n_segments=1, seed=3,
                         hot_frac=0.1, hot_weight=200.0)
@@ -150,30 +156,41 @@ def test_dedup_strategies_agree(spark, tmp_warehouse):
     d = os.path.join(tmp_warehouse, "log")
     os.makedirs(d)
     pq.write_table(wal[0], os.path.join(d, "w.parquet"))
-    df = load_events(spark, d)
-
-    a = latest_events(df, strategy="max_by").select("doc_id", "lsn", "op")
-    b = latest_events(df, strategy="window").select("doc_id", "lsn", "op")
-    c = latest_events(df, strategy="max_by", salt_buckets=8).select(
-        "doc_id", "lsn", "op"
+    cand = (
+        load_events(spark, d)
+        .withColumn("_lsn", F.col("lsn"))
+        .withColumn("_op_rank", op_rank(F.col("op")))
     )
-    d = latest_events(df, strategy="join").select("doc_id", "lsn", "op")
-    e = latest_events(df, strategy="join", salt_buckets=8).select(
-        "doc_id", "lsn", "op"
+
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("_lsn").desc(), F.col("_op_rank").desc()
     )
-    pa_ = a.orderBy("doc_id").toPandas()
-    for other in (b, c, d, e):
-        assert pa_.equals(other.orderBy("doc_id").toPandas())
+    reference = (
+        cand.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select("doc_id", "lsn", "op")
+        .orderBy("doc_id")
+        .toPandas()
+    )
+    assert len(reference) == cand.select("doc_id").distinct().count()
+    for salt_buckets in (0, 8):
+        got = (
+            resolve_winners(cand, "doc_id", salt_buckets=salt_buckets)
+            .select("doc_id", "lsn", "op")
+            .orderBy("doc_id")
+            .toPandas()
+        )
+        assert reference.equals(got), salt_buckets
 
 
-def test_latest_events_join_dedups_exact_redelivery(spark):
-    """The join strategy must keep exactly ONE copy of a
-    duplicate-delivered event (same key, lsn, op, content). The plan is
-    allowed a SortAggregate ONLY on the tied-keys branch (a narrow
-    count isolates tied keys first; the wide bulk flows through an
-    order-insensitive anti-join) — correctness must not depend on row
-    order or per-row ids, which task retries can change."""
-    from debezium_partial_snapshotter_spark.operators.dedup import latest_events
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_apply_batch_dedups_exact_redelivery(spark, tmp_warehouse, write_mode):
+    """A duplicate-delivered event (same key, lsn, op, content) ties
+    with itself: apply_batch must keep exactly ONE copy per key — the
+    pre-commit tie check detects the tie and reruns with the guard on.
+    Correctness must not depend on row order or per-row ids, which
+    task retries can change."""
+    from debezium_partial_snapshotter_spark.schemas import CHANGE_EVENT_SCHEMA
 
     rows = [
         ("r", "k1", 10, "true", "tokens/0000", ("k1", [1], 1, "s")),
@@ -182,16 +199,24 @@ def test_latest_events_join_dedups_exact_redelivery(spark):
         ("u", "k2", 11, "false", "tokens/0000", ("k2", [3], 1, "s")),
         ("u", "k2", 11, "false", "tokens/0000", ("k2", [3], 1, "s")),  # dup
     ]
-    from debezium_partial_snapshotter_spark.schemas import CHANGE_EVENT_SCHEMA
-
     df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
-    out = latest_events(df, strategy="join")
-    got = {r["doc_id"]: (r["lsn"], r["op"]) for r in out.collect()}
-    assert out.count() == 2
-    assert got == {"k1": (12, "u"), "k2": (11, "u")}
-
-    # tie-free input: exactly one row per key, nothing dropped
-    clean = latest_events(
-        df.dropDuplicates(["doc_id", "lsn"]), strategy="join"
+    table = empty_table_for(
+        os.path.join(tmp_warehouse, "dup"), TOKENS_SCHEMA, num_buckets=4
     )
-    assert clean.count() == 2
+    stats = apply_batch(table, df, commit_key="p:0", write_mode=write_mode)
+    assert stats["applied"] is True and stats["tie_guard"] is True
+    out = table.read(spark)
+    got = {r["doc_id"]: (r["_lsn"], list(r["tokens"])) for r in out.collect()}
+    assert out.count() == 2
+    assert got == {"k1": (12, [2]), "k2": (11, [3])}
+
+    # tie-free input: exactly one row per key, no guard rerun
+    clean = empty_table_for(
+        os.path.join(tmp_warehouse, "clean"), TOKENS_SCHEMA, num_buckets=4
+    )
+    stats = apply_batch(
+        clean, df.dropDuplicates(["doc_id", "lsn"]), commit_key="p:0",
+        write_mode=write_mode,
+    )
+    assert stats["tie_guard"] is False
+    assert clean.read(spark).count() == 2
