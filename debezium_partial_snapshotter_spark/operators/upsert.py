@@ -35,11 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from debezium_partial_snapshotter_spark.functions import (
-    bucket_id,
-    op_rank,
-    resolve_winners,
-)
+from debezium_partial_snapshotter_spark.functions import op_rank, resolve_winners
 from debezium_partial_snapshotter_spark.operators.schema_evolution import (
     conform,
     merge_schemas,
@@ -155,12 +151,7 @@ def _merge_and_commit(
     # CommitConflict (re-bucket + re-merge) instead of silently
     # misplacing rows. Reading them separately would reintroduce the
     # race the token guards against (stale expression + fresh token).
-    if hasattr(table, "bucket_plan"):
-        nb, bexpr, layout = table.bucket_plan(F.col("doc_id"))
-    else:
-        nb = table.num_buckets
-        bexpr = bucket_id(F.col("doc_id"), nb)
-        layout = None
+    _, bexpr, layout = table.bucket_plan(F.col("doc_id"))
 
     # ---- 1. plan: per-bucket row counts + LSN ranges. A cheap scan —
     # column-pruned to (doc_id, lsn), partial-aggregated to <= nb rows
@@ -262,7 +253,6 @@ def _merge_and_commit(
         commit_key=commit_key,
         new_schema=with_system(merged) if evolved else None,
         validate=validate,
-        expected_num_buckets=nb,
         expected_layout=layout,
         # snapshot keys are pinned: their events escape the
         # lsn > watermark replay filter, so only the key blocks a very

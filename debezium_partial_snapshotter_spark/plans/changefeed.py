@@ -488,7 +488,7 @@ def apply_feed(
     )
 
     key = table.bucket_key
-    nb, bexpr, layout = table.bucket_plan(F.col(key))
+    _, bexpr, layout = table.bucket_plan(F.col(key))
     cur = table.schema()
     feed_user = StructType(
         [
@@ -538,7 +538,6 @@ def apply_feed(
         affected_buckets=affected,
         commit_key=commit_key,
         new_schema=sch if evolved else None,
-        expected_num_buckets=nb,
         expected_layout=layout,
     )
 

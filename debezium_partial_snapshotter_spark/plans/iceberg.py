@@ -324,11 +324,9 @@ class IcebergTable:
         new_schema: StructType | None = None,
         watermark_lsn: int | None = None,
         snapshot_lsn: int | None = None,
-        max_retries: int = 5,
         validate=None,
         expected_version: int | None = None,
         read_version: int | None = None,
-        expected_num_buckets: int | None = None,
         pin_key: bool = False,
         expected_layout: str | None = None,
     ) -> bool | str:
@@ -342,6 +340,11 @@ class IcebergTable:
         otherwise (surfaced as CommitConflict so apply_batch re-merges).
         ``pin_key`` is likewise contract parity only: summary-property
         keys ride the snapshot log and are never evicted here.
+        ``expected_layout`` is the one bucketing guard: the token from
+        ``bucket_plan`` is the bucket count, so a rescale since the
+        writer planned raises CommitConflict (re-bucket + re-merge).
+        A lost Iceberg commit is not retried here; it surfaces as
+        CommitConflict to the caller's re-merge loop.
 
         **Validation is write-audit-publish** (VERDICT r2 "What's
         wrong 2" + both ADVICE r2 rollback findings). The round-2 shape
@@ -377,14 +380,6 @@ class IcebergTable:
         redelivery is a duplicate no-op. There is no state in which the
         key is visible without its validated data.
         """
-        if (
-            expected_num_buckets is not None
-            and self.num_buckets != expected_num_buckets
-        ):
-            raise CommitConflict(
-                f"num_buckets changed {expected_num_buckets} -> "
-                f"{self.num_buckets}; re-bucket and re-merge"
-            )
         if expected_layout is not None and expected_layout != self.layout_token():
             raise CommitConflict(
                 f"bucket layout changed {expected_layout} -> "

@@ -65,8 +65,22 @@ DATA_DIR = "data"
 MAX_COMMIT_KEYS = 512
 
 
+#: Tries for a lost manifest CAS (``_transact``) and for a re-plan after
+#: a guard conflict (``_rewrite_all``, ``split_bucket``).
+_CAS_TRIES = 5
+_REPLAN_TRIES = 3
+
+
 class CommitConflict(Exception):
     pass
+
+
+def _retry_conflicts(attempt: int, tries: int) -> None:
+    """Back off after a CommitConflict on try ``attempt``; on the last
+    try re-raise it. Call from the ``except CommitConflict`` block."""
+    if attempt == tries - 1:
+        raise
+    time.sleep(0.05 * (attempt + 1))
 
 
 class VersionExpiredError(FileNotFoundError):
@@ -523,28 +537,47 @@ class LakeTable:
         return j.select(*out_cols, "_change_type")
 
     # ------------------------------------------------------------- commit
-    def _write_partitioned(
-        self, df: DataFrame, affected_buckets: list[int]
-    ) -> tuple[str, dict[str, list[str]]]:
-        """Write df (carrying int ``_bucket``) under a fresh commit dir;
-        returns (commit_dir, bucket -> relative file list).
+    def _transact(self, change) -> bool:
+        """BEGIN .. COMMIT for the manifest — the data-plane twin of the
+        tracker's ``_transact`` and the ONE optimistic CAS every
+        manifest change goes through. ``change(man)`` sees the current
+        manifest and returns the fields the next version overrides (a
+        ``None`` value drops that field), or ``None`` to commit
+        nothing; ``version``/``parent``/``ts`` are stamped here. A lost
+        CAS re-reads and re-runs ``change``; a CommitConflict raised BY
+        ``change`` (a guard) propagates at once. Returns whether a
+        version was committed."""
+        for attempt in range(_CAS_TRIES):
+            man = self.manifest()
+            fields = change(man)
+            if fields is None:
+                return False
+            new_man = {
+                **man,
+                "version": man["version"] + 1,
+                "parent": man["version"],
+                "ts": time.time(),
+            }
+            for k, v in fields.items():
+                if v is None:
+                    new_man.pop(k, None)
+                else:
+                    new_man[k] = v
+            try:
+                self._write_manifest(new_man)
+                return True
+            except CommitConflict:
+                _retry_conflicts(attempt, _CAS_TRIES)
 
-        By default each bucket's rows are co-located by one extra
-        shuffle on _bucket (one file per bucket — tight layout, cheap
-        reads). DPS_WRITE_COALESCE=0 skips that shuffle: the merge
-        output is already hash-partitioned by doc_id (a refinement of
-        _bucket), so every task just fans its rows out to the buckets
-        it holds — one less full pass of the wide rows over the
-        network/memory bus per epoch, at the cost of up-to
-        tasks x buckets files per commit (compaction folds them)."""
-        commit_id = uuid.uuid4().hex[:12]
-        commit_dir = os.path.join(self.data_dir, f"c-{commit_id}")
-        n_out = max(1, len(affected_buckets))
-        staged = df
-        if os.environ.get("DPS_WRITE_COALESCE", "1") != "0":
-            staged = df.repartition(n_out, "_bucket")
+    def _write_partitioned(
+        self, df: DataFrame, commit_dir: str, affected_buckets: list[int]
+    ) -> dict[str, list[str]]:
+        """Write df (carrying int ``_bucket``) under ``commit_dir``, one
+        file per bucket (one shuffle on _bucket co-locates each
+        bucket's rows); returns bucket -> relative file list."""
         (
-            staged.write.partitionBy("_bucket")
+            df.repartition(max(1, len(affected_buckets)), "_bucket")
+            .write.partitionBy("_bucket")
             .option("maxRecordsPerFile", 0)
             .mode("overwrite")
             .parquet(commit_dir)
@@ -562,101 +595,129 @@ class LakeTable:
                 if f.endswith(".parquet")
             ]
             new_files.setdefault(b, []).extend(sorted(files))
-        return commit_dir, new_files
+        return new_files
 
-    def append_deltas(
+    def _commit_files(
         self,
+        kind: str,
         df: DataFrame,
         affected_buckets: list[int],
+        *,
         commit_key: str | None = None,
         new_schema: StructType | None = None,
         watermark_lsn: int | None = None,
         snapshot_lsn: int | None = None,
-        max_retries: int = 5,
         validate=None,
-        expected_num_buckets: int | None = None,
+        expected_version: int | None = None,
+        read_version: int | None = None,
         pin_key: bool = False,
         expected_layout: str | None = None,
+        manifest_update: dict | None = None,
+    ) -> bool | str:
+        """The one data commit behind ``replace_buckets`` (``kind=
+        "buckets"``: the new files replace each affected bucket's base
+        and fold its deltas) and ``append_deltas`` (``kind="deltas"``:
+        they are appended to each bucket's MoR deltas). Writes the files
+        under a fresh commit dir, validates them, then ``_transact``s
+        the manifest under the guards. Every exit that commits no
+        manifest — duplicate key, failed or raising validation, guard
+        conflict, exhausted CAS, failed write — removes the commit dir,
+        so only a crash can leave one for ``sweep_orphans``."""
+        if commit_key is not None and commit_key in self.committed_keys():
+            return False
+        commit_dir = os.path.join(self.data_dir, f"c-{uuid.uuid4().hex[:12]}")
+        touched = sorted(int(b) for b in affected_buckets)
+
+        def change(man: dict) -> dict | None:
+            layout = self._layout_of(man)
+            if expected_layout is not None and layout != expected_layout:
+                # a split or rescale landed since this batch was
+                # bucketed: its rows would sit in entries the new
+                # bucket function no longer maps those keys to
+                raise CommitConflict(
+                    f"bucket layout changed {expected_layout} -> {layout}; "
+                    "re-bucket and re-merge"
+                )
+            if expected_version is not None and man["version"] != expected_version:
+                raise CommitConflict(
+                    f"expected v{expected_version}, found v{man['version']}"
+                )
+            if read_version is not None and man["version"] != read_version:
+                overlap = self._conflicting_buckets(read_version, man, touched)
+                if overlap:
+                    raise CommitConflict(
+                        f"buckets {sorted(overlap)} were modified since "
+                        f"v{read_version}; caller must re-read and re-merge"
+                    )
+            keys, pinned = man["commit_keys"], man.get("pinned_keys", [])
+            if commit_key is not None and commit_key in set(keys) | set(pinned):
+                return None
+            deltas = {**man.get("deltas", {})}
+            fields = {
+                # the commit-kind marker: copied-forward manifests must
+                # not inherit an ancestor's kind, so every commit stamps
+                # its own (compact() overrides it with "compact", which
+                # the changefeed fast path treats as content-neutral)
+                "op": "replace" if kind == "buckets" else "delta",
+                "commit_keys": (
+                    keys + ([commit_key] if commit_key and not pin_key else [])
+                )[-MAX_COMMIT_KEYS:],
+                "pinned_keys": pinned
+                + ([commit_key] if commit_key and pin_key else []),
+                "touched": touched,
+                "deltas": deltas,
+            }
+            if kind == "deltas":
+                for b, files in new_files.items():
+                    if files:
+                        deltas[b] = deltas.get(b, []) + files
+            else:
+                base = fields["buckets"] = {**man["buckets"]}
+                for b, files in new_files.items():
+                    if files:
+                        base[b] = files
+                    else:
+                        base.pop(b, None)  # bucket emptied
+                    # a base replacement is fully resolved: deltas folded in
+                    deltas.pop(b, None)
+            if new_schema is not None:
+                fields["schema"] = json.loads(new_schema.json())
+            if watermark_lsn is not None:
+                fields["watermark_lsn"] = max(
+                    watermark_lsn, man.get("watermark_lsn", -1)
+                )
+            if snapshot_lsn is not None:
+                fields["snapshot_lsn"] = max(
+                    snapshot_lsn, man.get("snapshot_lsn", -1)
+                )
+            return {**fields, **(manifest_update or {})}
+
+        committed = False
+        try:
+            new_files = self._write_partitioned(df, commit_dir, affected_buckets)
+            # post-write / pre-commit validation window: data files exist
+            # but the manifest swap has NOT happened — a failed
+            # validation abandons the commit dir with zero reader-visible
+            # effect
+            if validate is not None and not validate():
+                return "invalid"
+            committed = self._transact(change)
+            return committed
+        finally:
+            if not committed:
+                shutil.rmtree(commit_dir, ignore_errors=True)
+
+    def append_deltas(
+        self, df: DataFrame, affected_buckets: list[int], **commit
     ) -> bool | str:
         """Merge-on-read commit: append ``df`` (batch winners INCLUDING
         delete tombstones, carrying ``_bucket`` and ``_is_delete``) as
         delta files — no base rewrite. Readers resolve winners on the
         fly; ``compact()`` folds deltas back into the base. This is the
         low-write-amplification path for epochs touching a small
-        fraction of each bucket (Iceberg v2 MoR analog)."""
-        if commit_key is not None and commit_key in self.committed_keys():
-            return False
-        commit_dir, new_files = self._write_partitioned(df, affected_buckets)
-        if validate is not None and not validate():
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            return "invalid"
-        for attempt in range(max_retries):
-            man = self.manifest()
-            if (
-                expected_num_buckets is not None
-                and man["num_buckets"] != expected_num_buckets
-            ):
-                # a concurrent rescale changed the layout: this df was
-                # bucketed under a stale num_buckets — committing would
-                # scatter rows into wrong partitions undetected
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"num_buckets changed {expected_num_buckets} -> "
-                    f"{man['num_buckets']}; re-bucket and re-merge"
-                )
-            if (
-                expected_layout is not None
-                and self._layout_of(man) != expected_layout
-            ):
-                # an incremental split landed since this batch was
-                # bucketed: its delta rows would sit in entries the new
-                # bucket function no longer maps those keys to
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"bucket layout changed {expected_layout} -> "
-                    f"{self._layout_of(man)}; re-bucket and re-merge"
-                )
-            if commit_key is not None and commit_key in (
-                set(man["commit_keys"]) | set(man.get("pinned_keys", []))
-            ):
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                return False
-            new_man = {
-                **man,
-                "version": man["version"] + 1,
-                "parent": man["version"],
-                "op": "delta",
-                "deltas": {**man.get("deltas", {})},
-                "commit_keys": (
-                    man["commit_keys"]
-                    + ([commit_key] if commit_key and not pin_key else [])
-                )[-MAX_COMMIT_KEYS:],
-                "pinned_keys": man.get("pinned_keys", [])
-                + ([commit_key] if commit_key and pin_key else []),
-                "touched": sorted(int(b) for b in affected_buckets),
-                "ts": time.time(),
-            }
-            for b, files in new_files.items():
-                if files:
-                    new_man["deltas"][b] = new_man["deltas"].get(b, []) + files
-            if new_schema is not None:
-                new_man["schema"] = json.loads(new_schema.json())
-            if watermark_lsn is not None:
-                new_man["watermark_lsn"] = max(
-                    watermark_lsn, man.get("watermark_lsn", -1)
-                )
-            if snapshot_lsn is not None:
-                new_man["snapshot_lsn"] = max(
-                    snapshot_lsn, man.get("snapshot_lsn", -1)
-                )
-            try:
-                self._write_manifest(new_man)
-                return True
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return True
+        fraction of each bucket (Iceberg v2 MoR analog). Takes the same
+        keyword arguments as ``replace_buckets``."""
+        return self._commit_files("deltas", df, affected_buckets, **commit)
 
     def delta_stats(self) -> dict:
         man = self.manifest()
@@ -666,30 +727,24 @@ class LakeTable:
         }
 
     def replace_buckets(
-        self,
-        df: DataFrame,
-        affected_buckets: list[int],
-        commit_key: str | None = None,
-        new_schema: StructType | None = None,
-        watermark_lsn: int | None = None,
-        snapshot_lsn: int | None = None,
-        max_retries: int = 5,
-        validate=None,
-        expected_version: int | None = None,
-        read_version: int | None = None,
-        new_num_buckets: int | None = None,
-        expected_num_buckets: int | None = None,
-        pin_key: bool = False,
-        expected_layout: str | None = None,
-        manifest_update: dict | None = None,
+        self, df: DataFrame, affected_buckets: list[int], **commit
     ) -> bool | str:
         """Copy-on-write commit: atomically swap the file lists of
         ``affected_buckets`` for freshly-written parquet of ``df``.
 
         df must already be the complete new content of those buckets and
-        must carry an integer ``_bucket`` column. Returns False when
-        ``commit_key`` was already committed (idempotent replay —
-        exactly-once under at-least-once delivery).
+        must carry an integer ``_bucket`` column. Keyword arguments:
+        ``commit_key``, ``pin_key``, ``new_schema``, ``watermark_lsn``,
+        ``snapshot_lsn``, ``validate``, ``expected_layout``,
+        ``expected_version``, ``read_version``, ``manifest_update``.
+        Returns False when ``commit_key`` was already committed
+        (idempotent replay — exactly-once under at-least-once
+        delivery), ``"invalid"`` when ``validate()`` failed.
+
+        ``expected_layout`` is the ``bucket_plan`` token df was bucketed
+        under; a split or rescale since then raises CommitConflict (the
+        token encodes the bucket count, so a count change is a layout
+        change).
 
         ``expected_version`` turns the commit into strict
         compare-and-swap: if any other commit landed since the caller
@@ -705,164 +760,70 @@ class LakeTable:
         drop that writer's rows/deltas — raise CommitConflict so the
         caller re-reads and re-merges. Commits to DISJOINT buckets
         rebase safely and do not conflict.
+
+        ``manifest_update`` overrides manifest fields in the same
+        commit (a ``None`` value drops the field).
         """
-        if commit_key is not None and commit_key in self.committed_keys():
-            return False
+        return self._commit_files("buckets", df, affected_buckets, **commit)
 
-        commit_dir, new_files = self._write_partitioned(df, affected_buckets)
-        # post-write / pre-commit validation window: data files exist but
-        # the manifest swap has NOT happened — a failed validation
-        # abandons the commit dir with zero reader-visible effect.
-        if validate is not None and not validate():
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            return "invalid"
-
-        for attempt in range(max_retries):
-            man = self.manifest()
-            if (
-                expected_num_buckets is not None
-                and man["num_buckets"] != expected_num_buckets
-            ):
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"num_buckets changed {expected_num_buckets} -> "
-                    f"{man['num_buckets']}; re-bucket and re-merge"
-                )
-            if (
-                expected_layout is not None
-                and self._layout_of(man) != expected_layout
-            ):
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"bucket layout changed {expected_layout} -> "
-                    f"{self._layout_of(man)}; re-bucket and re-merge"
-                )
-            if expected_version is not None and man["version"] != expected_version:
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"expected v{expected_version}, found v{man['version']}"
-                )
-            if read_version is not None and man["version"] != read_version:
-                overlap = self._conflicting_buckets(
-                    read_version, man, affected_buckets
-                )
-                if overlap:
-                    shutil.rmtree(commit_dir, ignore_errors=True)
-                    raise CommitConflict(
-                        f"buckets {sorted(overlap)} were modified since "
-                        f"v{read_version}; caller must re-read and re-merge"
-                    )
-            if commit_key is not None and commit_key in (
-                set(man["commit_keys"]) | set(man.get("pinned_keys", []))
-            ):
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                return False
-            new_man = {
-                **man,
-                "version": man["version"] + 1,
-                "parent": man["version"],
-                # the commit-kind marker: copied-forward manifests must
-                # not inherit an ancestor's kind, so every commit site
-                # stamps its own. manifest_update below may override
-                # (compact() stamps "compact", which the changefeed
-                # fast path treats as content-neutral).
-                "op": "replace",
-                "buckets": {**man["buckets"]},
-                "deltas": {**man.get("deltas", {})},
-                "commit_keys": (
-                    man["commit_keys"]
-                    + ([commit_key] if commit_key and not pin_key else [])
-                )[-MAX_COMMIT_KEYS:],
-                "pinned_keys": man.get("pinned_keys", [])
-                + ([commit_key] if commit_key and pin_key else []),
-                "touched": sorted(int(b) for b in affected_buckets),
-                "ts": time.time(),
-            }
-            for b, files in new_files.items():
-                if files:
-                    new_man["buckets"][b] = files
-                else:
-                    new_man["buckets"].pop(b, None)  # bucket emptied
-                # a base replacement is fully resolved: deltas folded in
-                new_man["deltas"].pop(b, None)
-            if new_num_buckets is not None:
-                new_man["num_buckets"] = int(new_num_buckets)
-            if manifest_update:
-                for k, v in manifest_update.items():
-                    if v is None:
-                        new_man.pop(k, None)
-                    else:
-                        new_man[k] = v
-            if new_schema is not None:
-                new_man["schema"] = json.loads(new_schema.json())
-            if watermark_lsn is not None:
-                new_man["watermark_lsn"] = max(
-                    watermark_lsn, man.get("watermark_lsn", -1)
-                )
-            if snapshot_lsn is not None:
-                new_man["snapshot_lsn"] = max(
-                    snapshot_lsn, man.get("snapshot_lsn", -1)
-                )
-            try:
-                self._write_manifest(new_man)
-                return True
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return True
-
-    def overwrite(
+    def _rewrite_all(
         self,
-        df: DataFrame,
-        new_schema: StructType | None = None,
-        max_retries: int = 3,
-    ) -> None:
-        """Full rewrite (bootstrap loads / tiny control tables).
-
-        ONE manifest read feeds the bucket count, the routing
-        expression, AND the commit-time ``expected_layout`` guard — the
-        separate ``num_buckets``/``bucket_expr()`` reads this replaced
-        were exactly the stale-expression/fresh-state race the
-        ``bucket_plan`` docstring forbids (a ``split_bucket`` landing
-        between them misplaces rows with no CommitConflict; ADVICE r3).
-        Like ``rescale``, the rewrite lands everything under the PLAIN
-        layout and clears any in-flight incremental-rescale state in
-        the same commit (``manifest_update={'rescale': None}``) —
-        routing with the transitional expression while clearing the
-        transition would strand rows in above-``nb`` entries that
-        later merge writers never replace."""
-
-        for attempt in range(max_retries):
+        spark: SparkSession,
+        df: DataFrame | None = None,
+        num_buckets: int | None = None,
+        **commit,
+    ) -> tuple[int, bool | str]:
+        """Rewrite EVERY entry in one commit under ``num_buckets``
+        (default: the current count) and clear any in-flight
+        incremental rescale in the same commit. ``df=None`` rewrites the
+        table's own rows as read at version v and CASes on v
+        (``expected_version``: a concurrent commit re-runs the rewrite,
+        never silently drops it); a given ``df`` depends on no version,
+        so only the layout it is bucketed under must still hold. ONE
+        manifest read per attempt feeds the count, the routing and the
+        guard — separate ``num_buckets``/``bucket_expr()`` reads would
+        pair a stale expression with fresh state (ADVICE r3). Routing
+        is always the PLAIN expression: routing with the transitional
+        one while clearing the transition would strand rows in
+        above-``nb`` entries that later merge writers never replace.
+        Returns (bucket count before, applied)."""
+        for attempt in range(_REPLAN_TRIES):
             man = self.manifest()
-            nb = man["num_buckets"]
+            old_nb = man["num_buckets"]
+            nb = old_nb if num_buckets is None else int(num_buckets)
             key = man.get("bucket_key", "doc_id")
-            staged = df.withColumn("_bucket", bucket_id(F.col(key), nb))
+            if df is None:
+                v = man["version"]
+                rows, guard = self.read(spark, version=v), {"expected_version": v}
+            else:
+                rows, guard = df, {"expected_layout": self._layout_of(man)}
+            # cover every existing entry (an in-flight incremental
+            # rescale may have entries above both bucket counts)
             affected = sorted(
-                set(range(nb))
+                set(range(max(old_nb, nb)))
                 | {int(b) for b in man.get("buckets", {})}
                 | {int(b) for b in man.get("deltas", {})}
             )
             try:
-                self.replace_buckets(
-                    staged,
-                    affected_buckets=affected,
-                    new_schema=new_schema,
-                    expected_layout=self._layout_of(man),
-                    manifest_update={"rescale": None},
+                return old_nb, self.replace_buckets(
+                    rows.withColumn("_bucket", bucket_id(F.col(key), nb)),
+                    affected,
+                    manifest_update={"rescale": None, "num_buckets": nb},
+                    **guard,
+                    **commit,
                 )
-                return
             except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+                _retry_conflicts(attempt, _REPLAN_TRIES)
+
+    def overwrite(self, df: DataFrame, new_schema: StructType | None = None) -> None:
+        """Full rewrite (bootstrap loads / tiny control tables)."""
+        self._rewrite_all(df.sparkSession, df, new_schema=new_schema)
 
     def rescale(
         self,
         spark: SparkSession,
         new_num_buckets: int,
         commit_key: str | None = None,
-        max_retries: int = 3,
     ) -> dict:
         """Bucket split/merge for table growth (SCALING.md future-work
         item, landed round 2): rewrite the table into a new bucket
@@ -875,47 +836,16 @@ class LakeTable:
         tracker (stale rows for vanished buckets are never discovered
         again). At 100 TB this is the escape hatch when buckets outgrow
         executor memory: double num_buckets, one table-scan-sized job."""
+        old_nb, applied = self._rewrite_all(
+            spark, num_buckets=new_num_buckets, commit_key=commit_key
+        )
+        return {
+            "applied": applied,
+            "from_buckets": old_nb,
+            "to_buckets": new_num_buckets,
+        }
 
-        for attempt in range(max_retries):
-            base_version = self.current_version()
-            man = self.manifest(base_version)
-            old_nb = man["num_buckets"]
-            key = man.get("bucket_key", "doc_id")
-            df = self.read(spark, version=base_version).withColumn(
-                "_bucket", bucket_id(F.col(key), new_num_buckets)
-            )
-            # cover every existing entry (an in-flight incremental
-            # rescale may have entries above both bucket counts) and
-            # clear any half-done transition state — the full rewrite
-            # lands everything under the new layout in one commit
-            affected = sorted(
-                set(range(max(old_nb, new_num_buckets)))
-                | {int(b) for b in man.get("buckets", {})}
-                | {int(b) for b in man.get("deltas", {})}
-            )
-            try:
-                applied = self.replace_buckets(
-                    df,
-                    affected_buckets=affected,
-                    commit_key=commit_key,
-                    expected_version=base_version,
-                    new_num_buckets=new_num_buckets,
-                    manifest_update={"rescale": None},
-                )
-                return {
-                    "applied": applied,
-                    "from_buckets": old_nb,
-                    "to_buckets": new_num_buckets,
-                }
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return {"applied": False}
-
-    def begin_rescale(
-        self, new_num_buckets: int, max_retries: int = 5
-    ) -> dict:
+    def begin_rescale(self, new_num_buckets: int) -> dict:
         """Open an ONLINE incremental rescale (VERDICT r2 next-4): the
         table keeps serving reads and applying tail batches while
         ``split_bucket`` migrates one bucket per commit; the last split
@@ -940,39 +870,30 @@ class LakeTable:
                 f"online rescale requires a multiple of {nb} (got {new}); "
                 "use rescale() for arbitrary counts"
             )
-        for attempt in range(max_retries):
-            man = self.manifest()
+
+        def change(man: dict) -> dict | None:
             rs = man.get("rescale")
             if rs:
                 if rs["to"] == new:
-                    return {"applied": False, "reason": "in_progress"}
+                    return None
                 raise CommitConflict(
                     f"another rescale to {rs['to']} is in progress"
                 )
-            new_man = {
-                **man,
-                "version": man["version"] + 1,
-                "parent": man["version"],
+            return {
                 "op": "rescale-begin",
                 "rescale": {"to": new, "done": []},
                 "touched": [],  # metadata-only: conflicts with no one
-                "ts": time.time(),
             }
-            try:
-                self._write_manifest(new_man)
-                return {"applied": True, "from_buckets": nb, "to_buckets": new}
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return {"applied": False}
+
+        if not self._transact(change):
+            return {"applied": False, "reason": "in_progress"}
+        return {"applied": True, "from_buckets": nb, "to_buckets": new}
 
     def split_bucket(
         self,
         spark: SparkSession,
         bucket: int,
         commit_key: str | None = None,
-        max_retries: int = 3,
     ) -> dict:
         """Migrate ONE bucket of an open incremental rescale: rewrite
         entry ``bucket`` (MoR deltas folded) into its ``to/nb`` child
@@ -983,9 +904,9 @@ class LakeTable:
         bucket-sized commits interleaved with live ingest."""
 
         b = int(bucket)
-        for attempt in range(max_retries):
-            base_version = self.current_version()
-            man = self.manifest(base_version)
+        for attempt in range(_REPLAN_TRIES):
+            man = self.manifest()
+            base_version = man["version"]
             rs = man.get("rescale")
             if not rs:
                 raise ValueError("no rescale in progress; call begin_rescale")
@@ -1010,18 +931,18 @@ class LakeTable:
                     read_version=base_version,
                     # the layout guard is LOAD-BEARING here, not just
                     # parity: manifest_update carries the done set
-                    # computed at base_version, and replace_buckets'
-                    # internal retry would otherwise re-apply it over a
-                    # CONCURRENT split's manifest — erasing that
-                    # split's done entry and hiding its child entries
-                    # from bucket_expr routing. Any layout change since
-                    # base therefore conflicts out to THIS loop, which
-                    # recomputes done from the fresh manifest.
+                    # computed at base_version, and a lost CAS re-runs
+                    # the commit over a CONCURRENT split's manifest —
+                    # erasing that split's done entry and hiding its
+                    # child entries from bucket_expr routing. Any layout
+                    # change since base therefore conflicts out to THIS
+                    # loop, which recomputes done from the fresh manifest.
                     expected_layout=self._layout_of(man),
-                    new_num_buckets=to if finalize else None,
-                    manifest_update={
-                        "rescale": None if finalize else {"to": to, "done": done}
-                    },
+                    manifest_update=(
+                        {"rescale": None, "num_buckets": to}
+                        if finalize
+                        else {"rescale": {"to": to, "done": done}}
+                    ),
                 )
                 return {
                     "applied": applied,
@@ -1032,10 +953,7 @@ class LakeTable:
             except CommitConflict:
                 # a concurrent apply touched this bucket: re-read its
                 # (new) content and retry the split
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-        return {"applied": False, "bucket": b}
+                _retry_conflicts(attempt, _REPLAN_TRIES)
 
     # ------------------------------------------------------------ utility
     def to_pandas(self, spark: SparkSession):
@@ -1079,7 +997,6 @@ class LakeTable:
         keep_last: int = 2,
         min_age_sec: float = 0.0,
         orphan_grace_sec: float = 3600.0,
-        max_retries: int = 5,
         sweep_orphans: bool = False,
     ) -> dict:
         """Storage reclamation (VERDICT r4 top item): every CoW commit
@@ -1152,10 +1069,10 @@ class LakeTable:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         now = time.time()
         # -------- phase 1: CAS the new horizon into the manifest chain
-        for attempt in range(max_retries):
+        plan: dict = {}
+
+        def change(man: dict) -> dict | None:
             versions = self._versions()
-            cur_v = versions[-1]
-            man = self.manifest(cur_v)
             retained = set(versions[-keep_last:])
             if min_age_sec > 0 and len(versions) > 1:
                 # a version is expirable only once it has been
@@ -1194,41 +1111,31 @@ class LakeTable:
                 # retain v_i iff its successor committed after the
                 # cutoff: successor index i+1 >= lo  <=>  i >= lo-1
                 retained.update(versions[max(0, lo - 1):])
-            horizon = max(
-                min(retained), man.get("min_version", versions[0])
-            )
+            horizon = max(min(retained), man.get("min_version", versions[0]))
+            plan.update(versions=versions, horizon=horizon)
             if not any(v < horizon for v in versions):
-                # nothing expirable: skip the CAS (no manifest churn on
-                # a quiet table) and — unless an orphan-only sweep was
-                # requested — the O(table files) directory walk too;
-                # the runner calls this every few applies, so the no-op
-                # path must cost ~one manifest read (round-5 review)
-                if not sweep_orphans:
-                    return {
-                        "applied": False,
-                        "reason": "nothing_to_expire",
-                        "horizon": horizon,
-                        "expired_manifests": 0,
-                        "files_deleted": 0,
-                        "bytes_deleted": 0,
-                    }
-                break  # orphan-only: no horizon change, straight to 2
-            new_man = {
-                **man,
-                "version": cur_v + 1,
-                "parent": cur_v,
+                return None  # nothing expirable: no manifest churn
+            return {
                 "op": "expire",
                 "min_version": horizon,
                 "touched": [],  # metadata-only: conflicts with no one
-                "ts": time.time(),
             }
-            try:
-                self._write_manifest(new_man)
-                break
-            except CommitConflict:
-                if attempt == max_retries - 1:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+
+        applied = self._transact(change)
+        versions, horizon = plan["versions"], plan["horizon"]
+        if not applied and not sweep_orphans:
+            # a quiet table also skips the O(table files) directory
+            # walk: the runner calls this every few applies, so the
+            # no-op path must cost ~one manifest read (round-5 review);
+            # an orphan-only sweep goes straight to phase 2
+            return {
+                "applied": False,
+                "reason": "nothing_to_expire",
+                "horizon": horizon,
+                "expired_manifests": 0,
+                "files_deleted": 0,
+                "bytes_deleted": 0,
+            }
         # -------- phase 2: physical delete (idempotent, post-CAS)
         def _refs(m: dict) -> set[str]:
             out: set[str] = set()

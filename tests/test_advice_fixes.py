@@ -366,3 +366,127 @@ def test_snapshot_commit_key_pinned_past_eviction(
     got = table.read(spark).where(F.col("doc_id") == "doc-a").collect()
     assert len(got) == 1  # MoR read emits no tied duplicates
     assert got[0]["_lsn"] == 205
+
+
+# ---------------------------------------------------------------------------
+# 5. the one data commit: no leaked commit dir, lost-CAS rebase
+# ---------------------------------------------------------------------------
+COMMITS = ["replace_buckets", "append_deltas"]
+
+
+def _new_table(tmp_warehouse):
+    from debezium_partial_snapshotter_spark.operators.upsert import with_system
+
+    path = os.path.join(tmp_warehouse, "t")
+    return LakeTable.create(path, with_system(TOKENS_SCHEMA), num_buckets=NB)
+
+
+def _commit(spark, table, method, docs, **kw):
+    """Commit one row per doc id through ``method`` into its real bucket."""
+    rows = [(d, bucket_id_py(d, NB)) for d in docs]
+    df = _staged(spark, rows)
+    if method == "append_deltas":
+        df = df.withColumn("_is_delete", F.lit(False))
+    return getattr(table, method)(df, sorted({b for _, b in rows}), **kw)
+
+
+def _commit_dirs(table):
+    return sorted(d for d in os.listdir(table.data_dir) if d.startswith("c-"))
+
+
+def _referenced_dirs(table):
+    man = table.manifest()
+    return sorted(
+        {
+            f.split(os.sep)[1]
+            for kind in ("buckets", "deltas")
+            for files in man.get(kind, {}).values()
+            for f in files
+        }
+    )
+
+
+def _two_buckets():
+    """Two doc ids in different buckets."""
+    by_bucket = {}
+    for i in range(200):
+        by_bucket.setdefault(bucket_id_py(f"k{i}", NB), f"k{i}")
+    (_, ours), (_, theirs) = sorted(by_bucket.items())[:2]
+    return ours, theirs
+
+
+@pytest.mark.parametrize("failure", ["cas_lost", "validate_raises"])
+@pytest.mark.parametrize("method", COMMITS)
+def test_failed_commit_leaves_no_commit_dir(
+    spark, tmp_warehouse, monkeypatch, method, failure
+):
+    """A data commit that lands no manifest must remove the files it
+    wrote: neither exhausted CAS retries nor a raising validation may
+    leave a ``c-*`` dir that only the ``sweep_orphans`` walk reclaims."""
+    table = _new_table(tmp_warehouse)
+    v = table.current_version()
+    kw = {"commit_key": "p1:0"}
+    if failure == "cas_lost":
+
+        def lose(self, manifest):
+            raise CommitConflict("forced CAS loss")
+
+        monkeypatch.setattr(LakeTable, "_write_manifest", lose)
+        expected = CommitConflict
+    else:
+
+        def validate():
+            raise RuntimeError("validation failed to run")
+
+        kw["validate"] = validate
+        expected = RuntimeError
+    with pytest.raises(expected):
+        _commit(spark, table, method, ["a", "b"], **kw)
+    assert _commit_dirs(table) == []
+    assert table.current_version() == v
+    assert "p1:0" not in table.committed_keys()
+
+
+@pytest.mark.parametrize("same_key", [False, True], ids=["disjoint", "same_key"])
+@pytest.mark.parametrize("method", COMMITS)
+def test_lost_cas_rebases_on_competing_commit(
+    spark, tmp_warehouse, monkeypatch, method, same_key
+):
+    """The first manifest CAS loses to a real competing commit. A
+    disjoint competitor is rebased over: both keys, both buckets and
+    both rows survive. A competitor that committed the SAME key makes
+    the loser a keyed no-op that leaves no commit dir."""
+    table = _new_table(tmp_warehouse)
+    v0 = table.current_version()
+    ours, theirs = _two_buckets()
+    their_key = "p1:0" if same_key else "p2:0"
+    orig = LakeTable._write_manifest
+    raced = []
+
+    def race(self, manifest):
+        if not raced:
+            raced.append(manifest["version"])
+            assert _commit(
+                spark, LakeTable(table.path), method, [theirs], commit_key=their_key
+            ) is True
+        return orig(self, manifest)  # the real CAS now loses
+
+    monkeypatch.setattr(LakeTable, "_write_manifest", race)
+    kw = {"read_version": v0} if method == "replace_buckets" else {}
+    applied = _commit(spark, table, method, [ours], commit_key="p1:0", **kw)
+    assert raced == [v0 + 1]
+    got = {r["doc_id"] for r in table.read(spark).collect()}
+    if same_key:
+        assert applied is False
+        assert table.current_version() == v0 + 1
+        assert got == {theirs}
+    else:
+        assert applied is True
+        assert table.current_version() == v0 + 2
+        assert {"p1:0", "p2:0"} <= table.committed_keys()
+        kind = "buckets" if method == "replace_buckets" else "deltas"
+        files = table.manifest()[kind]
+        for doc in (ours, theirs):
+            assert files[str(bucket_id_py(doc, NB))]
+        assert got == {ours, theirs}
+    assert _commit_dirs(table) == _referenced_dirs(table)

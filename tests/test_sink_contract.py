@@ -5,9 +5,11 @@ classpath (skipped otherwise — this container ships no Iceberg jar).
 
 The contract (used by apply_batch + PartialIngestRunner):
   num_buckets / bucket_key / schema() / read(spark, buckets, version) /
-  replace_buckets(df, affected, commit_key, new_schema, watermark_lsn,
-  snapshot_lsn, validate, read_version) / committed_keys() /
-  watermark_lsn() / snapshot_lsn() / current_version() / delta_stats()
+  bucket_plan(key) -> (num_buckets, bucket_expr, layout_token) /
+  replace_buckets(df, affected, *, commit_key, pin_key, new_schema,
+  watermark_lsn, snapshot_lsn, validate, read_version, expected_layout) /
+  committed_keys() / watermark_lsn() / snapshot_lsn() /
+  current_version() / delta_stats()
 """
 
 import os
