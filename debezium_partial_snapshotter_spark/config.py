@@ -63,7 +63,6 @@ class PipelineConfig:
     # window (plans/iceberg.py expire_versions docstring).
     expire_keep_last: int = 0  # 0 = disabled
     expire_min_age_sec: float = 3600.0
-    expire_orphan_grace_sec: float = 3600.0
     expire_every_applies: int = 8
 
     # streaming
@@ -98,7 +97,3 @@ class PipelineConfig:
     @property
     def commit_log_path(self) -> str:
         return f"{self.warehouse}/_commit_log/{self.target_table}"
-
-    @property
-    def metrics_path(self) -> str:
-        return f"{self.warehouse}/_metrics/{self.target_table}"

@@ -101,13 +101,6 @@ def _shingle_arr(text_col: str, n: int):
     )
 
 
-def shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Word n-gram shingles, exploded: (doc_id, shingle) distinct."""
-    return df.select(
-        "doc_id", F.explode(_shingle_arr(text_col, n)).alias("shingle")
-    )
-
-
 def _mh_col(shingle_col, s: int):
     """60-bit MinHash value: first 15 hex chars of md5(shingle#seed) as
     BIGINT. Round 2 moved this from the full 32-char hex string to a
@@ -506,47 +499,6 @@ def jaccard_pairs(
         )
         out = cross.unionByName(within)
     return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
-
-
-def jaccard_pairs_allpairs(
-    df: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 1,
-) -> DataFrame:
-    """Exhaustive-recall variant: candidate pairs via shared-shingle
-    equi-join. WARNING — degenerates quadratic when the vocabulary is
-    small relative to the corpus (every pair shares a shingle); use the
-    LSH-gated ``jaccard_pairs`` at scale."""
-    sh = shingles(df, text_col, shingle_n)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                4,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
-    )
 
 
 def simhash(df: DataFrame, text_col: str = "text", bits: int = 32) -> DataFrame:

@@ -60,6 +60,7 @@ from pyspark.sql.types import BooleanType, StructField, StructType
 
 from debezium_partial_snapshotter_spark.functions import resolve_winners
 from debezium_partial_snapshotter_spark.plans.lake import (
+    CommitConflict,
     LakeTable,
     VersionExpiredError,
     _atomic_create,
@@ -68,7 +69,8 @@ from debezium_partial_snapshotter_spark.plans.lake import (
 
 class ConcurrentConsumerError(Exception):
     """Another consumer instance sharing this cursor directory advanced
-    the cursor between our poll() and commit()."""
+    the cursor between our poll() and commit(), or (for a mirror) landed
+    a downstream commit between our downstream read and our apply."""
 
 
 class IneligibleRangeError(Exception):
@@ -449,6 +451,7 @@ def apply_feed(
     table: LakeTable,
     feed: DataFrame,
     commit_key: str | None = None,
+    expected_version: int | None = None,
 ) -> bool | str:
     """MERGE-apply an upsert/delete feed batch (the delta-mode shape)
     into a downstream :class:`LakeTable` with the same key — the
@@ -477,7 +480,10 @@ def apply_feed(
        ``(_lsn, _op_rank)``, which ties the already-applied upsert at
        the downstream resolve and the key survives deletion. The
        delta mode's net fallback re-ordinals deletes specifically to
-       stay apply-safe; :class:`ChangefeedMirror` enforces this."""
+       stay apply-safe; :class:`ChangefeedMirror` enforces this.
+
+    ``expected_version`` makes the append strict: a downstream commit
+    landing since that version raises ``CommitConflict``."""
     from debezium_partial_snapshotter_spark.operators.schema_evolution import (
         merge_schemas,
         schemas_equal,
@@ -539,71 +545,55 @@ def apply_feed(
         commit_key=commit_key,
         new_schema=sch if evolved else None,
         expected_layout=layout,
+        expected_version=expected_version,
     )
 
 
 class ChangefeedMirror:
     """Maintains a downstream replica of an upstream :class:`LakeTable`
     by consuming its changefeed — the full consumer loop packaged:
-    intent-logged poll → idempotent MERGE apply → cursor advance, with
+    delta-mode poll → idempotent MERGE apply → cursor advance, with
     automatic full re-bootstrap when the cursor falls below the
     upstream's expiration horizon. Reference analog: the connector's
     whole delivery loop exists to keep downstream consumers' replicas
     current without re-snapshotting (reference README.md:9-13).
 
-    **Crash-safe exactly-once.** The naive loop (poll to the current
-    version, apply, advance cursor) double-applies after a crash
-    between apply and cursor-commit IF the upstream advanced in the
-    interim: the retry would poll a LARGER range under a different
-    commit key, and re-appended winners for already-applied keys would
-    tie at the downstream resolve. ``sync`` therefore CAS-creates an
-    **intent record** (keyed by from-version, carrying the to-version)
-    before applying; a restart that finds the cursor's intent replays
-    EXACTLY that range, so the apply's commit key ``cf:<from>:<to>`` is
-    byte-identical and the duplicate is suppressed before any file is
-    written. After the cursor advances, the intent is cleared. 100-TB
-    note: mirror state is one integer + one tiny JSON — O(1), never
-    O(table).
+    **Crash-safe exactly-once.** Every apply lands atomically under the
+    downstream commit key ``cf:<from>:<to>``, so the replica's own
+    manifest records the newest upstream version it provably holds:
+    the ``to`` of its newest ``cf`` key (the newest key always survives
+    ``MAX_COMMIT_KEYS`` eviction). A sync that crashed between apply
+    and cursor commit left that key AHEAD of the cursor; the next sync
+    advances the cursor to it before polling, so the applied range is
+    never polled, let alone applied, a second time — however far the
+    upstream moved meanwhile (a larger re-polled range would re-append
+    already-applied winners, which tie at the downstream resolve).
+    Mirror state is the cursor plus the downstream's manifest — O(1),
+    never O(table).
 
-    **Concurrent instances.** Two syncs racing from the same cursor
-    converge on one range (the intent CAS: the loser adopts the
-    winner's to-version, so its apply is a commit-key no-op) and the
-    straggler aborts at the pre-apply cursor re-check or at
-    cursor-commit (ConcurrentConsumerError) — no duplicate rows land
-    in any single-overlap race. Sustained multi-writer operation still
-    wants external mutual exclusion, like any consumer group without a
-    broker; see the pre-apply re-check comment in :meth:`sync`."""
+    **Concurrent instances.** The apply is guarded on the downstream
+    version read before the poll: of two syncs racing from the same
+    state, at most one apply lands, and the other raises
+    :class:`ConcurrentConsumerError` (its apply lost the version guard,
+    or its cursor commit found the cursor moved) — no duplicate rows
+    land. The loser simply retries; sustained multi-writer operation
+    still wants external mutual exclusion, like any consumer group
+    without a broker."""
 
     def __init__(
         self,
         upstream: LakeTable,
         downstream: LakeTable,
         state_dir: str,
-        mode: str = "delta",
         compact_threshold: int = 24,
         expire_keep_last: int = 0,
         expire_min_age_sec: float = 3600.0,
         expire_every_syncs: int = 8,
     ):
-        if mode != "delta":
-            # mode='net' feed rows are NOT MERGE-apply-safe: net delete
-            # rows surface the PRE-image's (_lsn, _op_rank), which TIES
-            # the already-applied upsert at the downstream resolve and
-            # the key survives deletion. The delta mode's own net
-            # FALLBACK re-ordinals deletes (poll's inline comment) and
-            # covers every range shape, so the mirror has nothing to
-            # gain from raw net mode — refuse it instead of silently
-            # dropping deletes (round-6 review finding 1).
-            raise ValueError(
-                "ChangefeedMirror requires mode='delta' (its fallback "
-                "already handles non-delta ranges apply-safely); "
-                f"got {mode!r}"
-            )
         self.reader = ChangefeedReader(
             upstream, os.path.join(state_dir, "cursor")
         )
         self.downstream = downstream
-        self.mode = mode
         self.state_dir = state_dir
         # Downstream STORAGE HEALTH rides the sync cadence the same way
         # the ingest runner maintains the primary: every MERGE apply
@@ -621,121 +611,47 @@ class ChangefeedMirror:
         self.expire_min_age_sec = expire_min_age_sec
         self.expire_every_syncs = expire_every_syncs
         self._syncs_since_expire = 0
-        os.makedirs(state_dir, exist_ok=True)
-
-    # ------------------------------------------------------------ intent
-    # The intent is keyed BY from-version and CAS-created: two syncs
-    # racing from the same cursor converge on the winner's (from, to)
-    # range, so both applies carry the identical commit key and the
-    # loser's is suppressed before any file lands (round-6 review
-    # finding 3). A stale intent (from != cursor) is a finished sync's
-    # leftover — removed on sight.
-    def _intent_path(self, from_v: int) -> str:
-        return os.path.join(self.state_dir, f"intent-{from_v:08d}.json")
-
-    def _read_intent(self, from_v: int) -> dict | None:
-        try:
-            with open(self._intent_path(from_v)) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, json.JSONDecodeError):
-            # a torn intent write means the apply never started for it;
-            # safe to re-plan the range from scratch
-            return None
-
-    def _cas_intent(self, from_v: int, to_v: int) -> bool:
-        tmp = os.path.join(
-            self.state_dir, f".intent-tmp-{uuid.uuid4().hex}"
-        )
-        with open(tmp, "w") as fh:
-            json.dump({"from": from_v, "to": to_v}, fh)
-        return _atomic_create(tmp, self._intent_path(from_v))
-
-    def _clear_intent(self, from_v: int) -> None:
-        """Remove ONE intent file — only ever the caller's own, or one
-        provably dead. Clearing indiscriminately would delete a
-        concurrent sync's freshly CAS'd intent for a LATER
-        from-version and re-open the divergent-range double-apply the
-        intent exists to prevent (second review pass)."""
-        try:
-            os.remove(self._intent_path(from_v))
-        except FileNotFoundError:
-            pass
-
-    def _prune_stale_intents(self, cur: int) -> None:
-        """Remove intents whose from-version is BELOW the current
-        cursor — provably finished: the cursor is monotone, so no sync
-        can ever legitimately act on them again. Intents at or ABOVE
-        the cursor are left alone: an intent for a HIGHER from-version
-        belongs to a concurrent sync whose cursor read is newer than
-        this pruner's — deleting it would strip that sync's crash
-        protection and re-open the divergent-range double-apply
-        (third review pass)."""
-        for f in os.listdir(self.state_dir):
-            if not f.startswith("intent-"):
-                continue
-            try:
-                v = int(f[len("intent-"):-len(".json")])
-            except ValueError:
-                continue
-            if v < cur:
-                self._clear_intent(v)
 
     # -------------------------------------------------------------- sync
     def sync(self, spark: SparkSession) -> dict:
         """Advance the mirror by one changefeed batch (everything
-        committed upstream since the cursor, or a crashed sync's
-        pinned range). Returns a stats dict; call in the consumer's
-        poll loop."""
+        committed upstream since the cursor). Returns a stats dict; call
+        in the consumer's poll loop."""
+        down = self.downstream.manifest()
         cur = self.reader.cursor()
         if cur is None:
             cur = self.reader.start(from_version=1)  # mirror from genesis
-        self._prune_stale_intents(cur)
-        # The "intent before apply" invariant: NO apply may start
-        # without a durable intent pinning its exact range. Loop until
-        # we either adopt an existing intent for this cursor or win the
-        # CAS for one — merely losing the CAS and finding the winner's
-        # intent already CLEARED (an idle sync can create, commit at
-        # the same cursor value, and clear in the window) must retry,
-        # not fall through intent-less (third review pass). The loop
-        # terminates: each iteration ends in adopt, CAS-win, or a
-        # cleared-intent retry whose next CAS attempt finds the slot
-        # free.
-        while True:
-            intent = self._read_intent(cur)
-            if intent is not None:
-                to_v = intent["to"]  # crashed mid-sync: replay THAT range
-                break
-            to_v = self.reader.table.current_version()
-            if self._cas_intent(cur, to_v):
-                break
-        # last pre-apply gate: a concurrent sync may have finished
-        # (cursor advanced + intent cleared) between our cursor read
-        # and the intent CAS — re-check before mutating the downstream.
-        # (A commit landing INSIDE the apply is still caught by
-        # reader.commit below, after a commit-key-suppressed no-op
-        # apply when ranges matched; sustained multi-writer racing
-        # needs external mutual exclusion, same as any consumer group
-        # without a broker.)
-        if self.reader.cursor() != cur:
-            raise ConcurrentConsumerError(
-                f"cursor moved past {cur} before apply; another mirror "
-                f"instance is active on {self.state_dir}"
+        # `to` of every landed cf:<from>:<to> key, oldest first
+        landed = [
+            int(k.split(":")[2])
+            for k in down["commit_keys"]
+            if k.startswith("cf:")
+        ]
+        if landed and landed[-1] > cur:
+            # the previous sync crashed between apply and cursor
+            # commit: the replica already holds (cur, landed[-1]]
+            self.reader.commit(
+                ChangefeedBatch(None, cur, landed[-1], "delta", False, 0)
             )
         try:
-            batch = self.reader.poll(
-                spark, mode=self.mode, to_version=to_v
-            )
+            batch = self.reader.poll(spark, mode="delta")
         except VersionExpiredError:
             return self._bootstrap(spark)
         applied: bool | str = False
         if batch.to_version > batch.from_version:
-            applied = apply_feed(
-                self.downstream,
-                batch.df,
-                commit_key=f"cf:{batch.from_version}:{batch.to_version}",
-            )
+            key = f"cf:{batch.from_version}:{batch.to_version}"
+            try:
+                applied = apply_feed(
+                    self.downstream, batch.df, commit_key=key,
+                    expected_version=down["version"],
+                )
+            except CommitConflict as e:
+                raise ConcurrentConsumerError(
+                    f"downstream moved past v{down['version']} before "
+                    f"{key} applied; another mirror instance is active "
+                    f"on {self.state_dir}"
+                ) from e
         self.reader.commit(batch)
-        self._clear_intent(cur)
         stats = {
             "applied": applied,
             "from_version": batch.from_version,
@@ -817,8 +733,6 @@ class ChangefeedMirror:
             conform(img, merged), new_schema=merged if evolved else None
         )
         self.reader.commit_bootstrap(boot)
-        if boot.from_version >= 0:
-            self._clear_intent(boot.from_version)
         return {
             "applied": True,
             "from_version": boot.from_version,

@@ -284,12 +284,11 @@ class LakeTable:
     def bucket_plan(self, key: "F.Column"):
         """(num_buckets, bucket_expr, layout_token) from ONE manifest
         read. Appliers must take all three from here, not from separate
-        ``num_buckets``/``bucket_expr()``/``layout_token()`` calls: a
-        concurrent ``split_bucket`` landing between two reads would
-        pair a STALE bucket expression with the NEW layout token, so
-        the commit-time layout guard passes while rows are routed to
-        wrong bucket entries — exactly the corruption the token exists
-        to catch."""
+        ``num_buckets``/``layout_token()`` calls: a concurrent
+        ``split_bucket`` landing between two reads would pair a STALE
+        bucket expression with the NEW layout token, so the commit-time
+        layout guard passes while rows are routed to wrong bucket
+        entries — exactly the corruption the token exists to catch."""
         man = self.manifest()
         return (
             man["num_buckets"],
@@ -298,6 +297,13 @@ class LakeTable:
         )
 
     def _bucket_expr_of(self, man: dict, key: "F.Column"):
+        """Effective bucket assignment under ``man``, honoring an
+        in-flight incremental rescale (linear-hashing style): keys whose
+        OLD bucket has been split route to md5 % new_count, everyone
+        else stays on md5 % old_count. Because the new count is a
+        multiple of the old, a key's new bucket id is always
+        ``old_b + i*nb`` — entry ids never collide across the two
+        numberings."""
         nb = man["num_buckets"]
         rs = man.get("rescale")
         if not rs or not rs.get("done"):
@@ -307,19 +313,6 @@ class LakeTable:
         return F.when(
             old.isin([int(b) for b in rs["done"]]), new
         ).otherwise(old)
-
-    def bucket_expr(self, key: "F.Column"):
-        """Effective bucket assignment, honoring an in-flight
-        incremental rescale (linear-hashing style): keys whose OLD
-        bucket has been split route to md5 % new_count, everyone else
-        stays on md5 % old_count. Because the new count is a multiple
-        of the old, a key's new bucket id is always ``old_b + i*nb`` —
-        entry ids never collide across the two numberings.
-
-        NOTE: pairs with a SEPARATE manifest read from
-        ``layout_token()`` — when both the expression and the token are
-        needed (any commit path), use ``bucket_plan`` instead."""
-        return self._bucket_expr_of(self.manifest(), key)
 
     def watermark_lsn(self) -> int:
         return self.manifest().get("watermark_lsn", -1)
@@ -781,8 +774,8 @@ class LakeTable:
         never silently drops it); a given ``df`` depends on no version,
         so only the layout it is bucketed under must still hold. ONE
         manifest read per attempt feeds the count, the routing and the
-        guard — separate ``num_buckets``/``bucket_expr()`` reads would
-        pair a stale expression with fresh state (ADVICE r3). Routing
+        guard — separate count and routing reads would pair a stale
+        expression with fresh state (ADVICE r3). Routing
         is always the PLAIN expression: routing with the transitional
         one while clearing the transition would strand rows in
         above-``nb`` entries that later merge writers never replace.
@@ -855,7 +848,7 @@ class LakeTable:
         must be a multiple of the current count, so a key in old bucket
         b can only move to ``b + i*nb`` — entry ids from the two
         numberings never collide, and the effective bucket function
-        (``bucket_expr``) is decidable per key from the ``done`` set
+        (``_bucket_expr_of``) is decidable per key from the ``done`` set
         alone. Concurrent appliers capture ``layout_token()`` at plan
         time; a split landing under them turns their commit into
         CommitConflict -> re-bucket + re-merge (never silent
@@ -934,7 +927,7 @@ class LakeTable:
                     # computed at base_version, and a lost CAS re-runs
                     # the commit over a CONCURRENT split's manifest —
                     # erasing that split's done entry and hiding its
-                    # child entries from bucket_expr routing. Any layout
+                    # child entries from the bucket routing. Any layout
                     # change since base therefore conflicts out to THIS
                     # loop, which recomputes done from the fresh manifest.
                     expected_layout=self._layout_of(man),
@@ -978,7 +971,7 @@ class LakeTable:
         if not targets:
             return {"compacted_buckets": [], "applied": False}
         df = self.read(spark, buckets=targets, version=base_version).withColumn(
-            "_bucket", self.bucket_expr(F.col(self.bucket_key))
+            "_bucket", self._bucket_expr_of(man, F.col(man["bucket_key"]))
         )
         # strict CAS on the version the new base was computed from: a
         # concurrent delta commit makes this raise instead of being

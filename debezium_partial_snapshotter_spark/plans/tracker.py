@@ -52,10 +52,6 @@ ARROW_SCHEMA = pa.schema(
 _COLS = [f.name for f in ARROW_SCHEMA]
 
 
-class TrackerError(Exception):
-    pass
-
-
 class SnapshotTracker:
     def __init__(self, path: str):
         self.path = path

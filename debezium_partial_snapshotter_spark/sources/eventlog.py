@@ -105,20 +105,6 @@ def _rows_to_arrow(
     )
 
 
-def _make_after(
-    doc_id: str, tokens: np.ndarray, source: str, spec: EventLogSpec
-) -> dict:
-    row = {
-        "doc_id": doc_id,
-        "tokens": tokens,
-        "n_tok": int(len(tokens)),
-        "source": source,
-    }
-    if spec.schema_v2:
-        row["lang"] = ["en", "de", "fr", "zh", "es"][len(tokens) % 5]
-    return row
-
-
 def initial_state_table(spec: EventLogSpec) -> pa.Table:
     """The source table's content at snapshot time, as a vectorized
     arrow table (payload schema)."""

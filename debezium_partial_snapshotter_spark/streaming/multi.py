@@ -230,7 +230,6 @@ class MultiTableIngestRunner:
                 stats["expiration"] = table.expire_versions(
                     keep_last=self.cfg.expire_keep_last,
                     min_age_sec=self.cfg.expire_min_age_sec,
-                    orphan_grace_sec=self.cfg.expire_orphan_grace_sec,
                 )
             self._expire_counters[t] = c
         return stats

@@ -1,16 +1,17 @@
 """Randomized-schedule property for the changefeed consumer loop
 (round 6): for ANY seeded interleaving of {MoR apply, CoW apply,
-upstream compaction, mirror sync, mirror crash mid-sync (intent +
-apply, no cursor commit), mirror restart, upstream expiration} that
-ends with a drain, the downstream replica is BYTE-EQUAL to the
-upstream image with exactly one row per key — across fast-path polls,
-net fallbacks (CoW in range), compaction-skips, commit-key-replayed
-crash ranges, and full bootstraps when expiration outruns the cursor.
+upstream compaction, mirror sync, mirror crash mid-sync (apply lands,
+no cursor commit), mirror restart, upstream expiration} that ends with
+a drain, the downstream replica is BYTE-EQUAL to the upstream image
+with exactly one row per key — across fast-path polls, net fallbacks
+(CoW in range), compaction-skips, syncs resuming from a crashed
+apply's landed commit key, and full bootstraps when expiration
+outruns the cursor.
 
 Each op class maps to a branch of the protocol the ledger claims:
 apply/compact exercise eligibility, apply_cow the re-ordinaled net
-fallback, crash the intent replay, expire the bootstrap, restart the
-cursor/intent persistence. The invariant is the mirror contract
+fallback, crash the landed-key resume, expire the bootstrap, restart
+the cursor persistence. The invariant is the mirror contract
 itself; the upstream image is trusted because the replay suite pins it
 against oracle_apply independently."""
 
@@ -23,11 +24,11 @@ from debezium_partial_snapshotter_spark.operators.upsert import (
     apply_batch,
     empty_table_for,
 )
+from debezium_partial_snapshotter_spark.plans import changefeed
 from debezium_partial_snapshotter_spark.plans.changefeed import (
     ChangefeedMirror,
     apply_feed,
 )
-from debezium_partial_snapshotter_spark.plans.lake import VersionExpiredError
 from debezium_partial_snapshotter_spark.schemas import TOKENS_SCHEMA
 from debezium_partial_snapshotter_spark.sources.eventlog import (
     EventLogSpec,
@@ -42,6 +43,10 @@ N_SCHEDULES = 8
 OPS_PER_SCHEDULE = 9
 
 
+class _Crash(Exception):
+    """The consumer process dies at this point."""
+
+
 def _image(spark, table):
     return {
         r["doc_id"]: (r["_lsn"], r["_op_rank"], r["n_tok"])
@@ -49,7 +54,7 @@ def _image(spark, table):
     }
 
 
-def test_random_consumer_schedules_converge(spark, tmp_warehouse):
+def test_random_consumer_schedules_converge(spark, tmp_warehouse, monkeypatch):
     for schedule in range(N_SCHEDULES):
         rng = random.Random(1000 + schedule)
         root = os.path.join(tmp_warehouse, f"s{schedule}")
@@ -84,29 +89,25 @@ def test_random_consumer_schedules_converge(spark, tmp_warehouse):
             next_seg += 1
 
         def crash_sync():
-            """First half of sync(): durable intent + apply, then
-            'crash' before the cursor commit."""
-            cur = mirror.reader.cursor()
-            if cur is None:
+            """A real sync() that 'crashes' right after its apply lands,
+            before the cursor commit (or before a bootstrap writes)."""
+            if mirror.reader.cursor() is None:
                 return
-            intent = mirror._read_intent(cur)
-            if intent is not None:
-                to_v = intent["to"]
-            else:
-                to_v = up.current_version()
-                if not mirror._cas_intent(cur, to_v):
-                    return
-            try:
-                batch = mirror.reader.poll(
-                    spark, mode="delta", to_version=to_v
-                )
-            except VersionExpiredError:
-                return  # crashed before the apply; intent remains
-            if batch.to_version > batch.from_version:
-                apply_feed(
-                    down, batch.df,
-                    commit_key=f"cf:{batch.from_version}:{batch.to_version}",
-                )
+
+            def apply_then_crash(*args, **kw):
+                apply_feed(*args, **kw)
+                raise _Crash
+
+            def crash(*_):
+                raise _Crash
+
+            with monkeypatch.context() as mp:
+                mp.setattr(changefeed, "apply_feed", apply_then_crash)
+                mp.setattr(mirror, "_bootstrap", crash)
+                try:
+                    mirror.sync(spark)
+                except _Crash:
+                    pass
 
         ops = {
             "apply": lambda: apply_next("mor"),
@@ -135,10 +136,10 @@ def test_random_consumer_schedules_converge(spark, tmp_warehouse):
         while next_seg < len(seg_dirs):
             apply_next("mor")
         # quiescence = an EMPTY sync at the upstream head. `applied is
-        # False` alone is NOT quiescence: a sync replaying a crashed
-        # intent's range is a commit-key duplicate (False) while the
-        # cursor still trails the head — the first run of this property
-        # caught exactly that misreading.
+        # False` alone is NOT quiescence: a range of content-neutral
+        # commits (upstream compactions) applies nothing yet still
+        # moves the cursor, so a sync can report False while it
+        # advances.
         for _ in range(6):
             s = mirror.sync(spark)
             if (

@@ -367,31 +367,21 @@ def _down_image(spark, table):
     }
 
 
-def test_mirror_tracks_upstream_and_survives_crash(spark, tmp_warehouse):
-    """ChangefeedMirror end-to-end, including the crash window the
-    intent record exists for: a sync that applied but never advanced
-    the cursor, with the UPSTREAM ADVANCING before the retry. The
-    retry must replay EXACTLY the intent's range (commit-key no-op),
-    then a further sync picks up the new commits — no duplicate rows,
-    downstream byte-equal to upstream."""
-    from debezium_partial_snapshotter_spark.plans.changefeed import (
-        ChangefeedMirror,
-        apply_feed,
-    )
-
+def _mor_upstream(spark, tmp_warehouse, seed=13):
+    """An empty upstream table plus ``apply_seg(i)``, which MoR-applies
+    segment i of a snapshot + 6-segment WAL under key ``p:<i>``."""
     spec = EventLogSpec(
-        n_docs=80, n_events=900, n_segments=6, seed=13, num_buckets=NB,
+        n_docs=80, n_events=900, n_segments=6, seed=seed, num_buckets=NB,
         delete_frac=0.2,
     )
     state = generate_initial_state(spec)
     snap = snapshot_read_events(state, spec.start_lsn, spec)
     wal = generate_change_log(spec)
-    segs = [snap] + wal
     table = empty_table_for(
         os.path.join(tmp_warehouse, "up"), TOKENS_SCHEMA, num_buckets=NB
     )
     dirs = []
-    for i, seg in enumerate(segs):
+    for i, seg in enumerate([snap] + wal):
         d = os.path.join(tmp_warehouse, f"e{i}")
         os.makedirs(d)
         pq.write_table(seg, os.path.join(d, "s.parquet"))
@@ -403,6 +393,25 @@ def test_mirror_tracks_upstream_and_survives_crash(spark, tmp_warehouse):
             write_mode="mor",
         )
 
+    return table, apply_seg
+
+
+def test_mirror_tracks_upstream_and_survives_crash(spark, tmp_warehouse):
+    """ChangefeedMirror end-to-end, including a sync that crashed after
+    its apply landed but before the cursor commit, with the UPSTREAM
+    ADVANCING before the restart. The downstream's newest
+    ``cf:<from>:<to>`` key is then ahead of the cursor: the restarted
+    sync must resume from that ``to`` and never re-poll the applied
+    range — no duplicate rows, downstream byte-equal to upstream. An
+    intent file left in the state dir by the earlier intent protocol
+    is ignored."""
+    import json
+
+    from debezium_partial_snapshotter_spark.plans.changefeed import (
+        ChangefeedMirror,
+    )
+
+    table, apply_seg = _mor_upstream(spark, tmp_warehouse)
     for i in (0, 1, 2):
         apply_seg(i)
     down = empty_table_for(
@@ -420,20 +429,19 @@ def test_mirror_tracks_upstream_and_survives_crash(spark, tmp_warehouse):
     apply_seg(3)
     cur = m.reader.cursor()
     to_v = table.current_version()
-    assert m._cas_intent(cur, to_v)
     crashed = m.reader.poll(spark, mode="delta", to_version=to_v)
     assert apply_feed(down, crashed.df, commit_key=f"cf:{cur}:{to_v}") is True
-    # ... and the upstream advances AGAIN before the retry
+    with open(os.path.join(sdir, f"intent-{cur:08d}.json"), "w") as fh:
+        json.dump({"from": cur, "to": to_v}, fh)
+    # ... and the upstream advances AGAIN before the restart
     apply_seg(4)
 
     m2 = ChangefeedMirror(table, down, sdir)  # restart
     s1 = m2.sync(spark)
-    # the retry replayed EXACTLY the intent range; the apply was a
-    # commit-key duplicate, not a second append
-    assert (s1["from_version"], s1["to_version"]) == (cur, to_v)
-    assert s1["applied"] is False
-    s2 = m2.sync(spark)
-    assert s2["applied"] is True and s2["to_version"] == table.current_version()
+    # resumed from the landed key: only the commits after it were polled
+    assert s1["from_version"] == to_v
+    assert s1["applied"] is True
+    assert s1["to_version"] == table.current_version()
     apply_seg(5)
     m2.sync(spark)
 
@@ -442,31 +450,43 @@ def test_mirror_tracks_upstream_and_survives_crash(spark, tmp_warehouse):
     rows = down.read(spark).collect()
     assert len(rows) == len({r["doc_id"] for r in rows})  # no dup rows
 
-    # pruning direction (third review pass): an intent BELOW the cursor
-    # is provably finished and removed; one ABOVE belongs to a NEWER
-    # concurrent sync and must survive
-    cur2 = m2.reader.cursor()
-    assert m2._cas_intent(cur2 - 1, cur2)
-    assert m2._cas_intent(cur2 + 7, cur2 + 9)
-    m2._prune_stale_intents(cur2)
-    assert m2._read_intent(cur2 - 1) is None
-    assert m2._read_intent(cur2 + 7) == {"from": cur2 + 7, "to": cur2 + 9}
-    m2._clear_intent(cur2 + 7)
 
+def test_racing_mirrors_apply_once(spark, tmp_warehouse, monkeypatch):
+    """Two mirrors on one state dir and one downstream: A runs a whole
+    sync, over a range the upstream extended meanwhile, between B's poll
+    and B's apply. B must raise ConcurrentConsumerError and land
+    nothing; the replica stays equal to the upstream, one row per key."""
+    from debezium_partial_snapshotter_spark.plans import changefeed
 
-def test_mirror_refuses_net_mode(tmp_warehouse):
-    """mode='net' feed rows are not MERGE-apply-safe (pre-image delete
-    ordinals tie at the downstream resolve); the mirror must refuse up
-    front rather than silently lose deletes (round-6 review)."""
-    import pytest as _pytest
-
-    from debezium_partial_snapshotter_spark.plans.changefeed import (
-        ChangefeedMirror,
+    table, apply_seg = _mor_upstream(spark, tmp_warehouse, seed=19)
+    for i in (0, 1):
+        apply_seg(i)
+    down = empty_table_for(
+        os.path.join(tmp_warehouse, "down"), TOKENS_SCHEMA, num_buckets=3
     )
+    sdir = os.path.join(tmp_warehouse, "mirror")
+    a = changefeed.ChangefeedMirror(table, down, sdir)
+    b = changefeed.ChangefeedMirror(table, down, sdir)
+    assert a.sync(spark)["applied"] is True
+    apply_seg(2)
+    real = changefeed.apply_feed
 
-    with _pytest.raises(ValueError, match="delta"):
-        ChangefeedMirror(None, None, os.path.join(tmp_warehouse, "m"),
-                         mode="net")
+    def a_wins_the_race(*args, **kw):
+        monkeypatch.setattr(changefeed, "apply_feed", real)
+        apply_seg(3)
+        assert a.sync(spark)["applied"] is True
+        return real(*args, **kw)
+
+    monkeypatch.setattr(changefeed, "apply_feed", a_wins_the_race)
+    with pytest.raises(ConcurrentConsumerError):
+        b.sync(spark)
+    cf_keys = [k for k in down.committed_keys() if k.startswith("cf:")]
+    assert len(cf_keys) == 2  # A's two syncs; B landed nothing
+    b.sync(spark)  # the loser retries and catches up
+
+    assert _down_image(spark, down) == _upstream_image(spark, table)
+    rows = down.read(spark).collect()
+    assert len(rows) == len({r["doc_id"] for r in rows})
 
 
 def test_commit_refuses_cursor_rewind(spark, tmp_warehouse):

@@ -286,7 +286,6 @@ def test_runner_integrated_expiration_bounds_storage(spark, tmp_warehouse):
         num_buckets=NB,
         expire_keep_last=2,
         expire_min_age_sec=0.0,
-        expire_orphan_grace_sec=0.0,
         expire_every_applies=2,
     )
     src = ParquetWalSource(spark, sp, log_dir, num_buckets=NB)

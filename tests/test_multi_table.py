@@ -324,7 +324,6 @@ def test_multi_table_snapshot_epoch_expires(spark, tmp_warehouse):
     runner, _ = _runner(
         spark, tmp_warehouse, sources, expire_keep_last=1,
         expire_every_applies=1, expire_min_age_sec=0.0,
-        expire_orphan_grace_sec=0.0,
     )
     out = runner.snapshot_epoch()
     assert out["applied"]
