@@ -16,18 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-WORD_SPLIT = r"\s+"
-
-
-def _words(col):
-    return F.split(F.trim(F.lower(col)), WORD_SPLIT)
-
-
-def _shuffle_partitions(df: DataFrame) -> int:
-    """Scale-adaptive parallelism for explicit repartitions: the
-    session's shuffle-partition count (sized to the cluster by the
-    caller/conf), never a constant."""
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+from debezium_partial_snapshotter_spark.functions import spread_input
+from debezium_partial_snapshotter_spark.operators import graph
+from debezium_partial_snapshotter_spark.operators.text import _words
 
 
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -43,17 +34,11 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     bench's top cost). An explicit-count repartition has shuffle origin
     REPARTITION_BY_NUM, which AQE's CoalesceShufflePartitions leaves
     alone, and it satisfies the join's ClusteredDistribution, so the
-    expansion runs with full parallelism at every scale. The count
-    tracks spark.sql.shuffle.partitions — no local-mode constant."""
-    return df.repartition(_shuffle_partitions(df), *cols)
-
-
-def _spread_input(df: DataFrame) -> DataFrame:
-    """See functions.spread_input (measured here: 2.3s single-task
-    minhash stage at sf0.1 without it)."""
-    from debezium_partial_snapshotter_spark.functions import spread_input
-
-    return spread_input(df)
+    expansion runs with full parallelism at every scale. The count is
+    the session's spark.sql.shuffle.partitions — no local-mode
+    constant."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -131,8 +116,9 @@ def _sig_wide(
     elimination and recomputes the regex split per element), hash k ways
     per shingle row, then ONE partial-aggregating groupBy: min is
     algebraic, so the shuffle carries only k BIGINTs per doc per map
-    partition regardless of document length."""
-    sh = _spread_input(df).select(
+    partition regardless of document length. The input is spread first
+    (measured: 2.3s single-task stage at sf0.1 without it)."""
+    sh = spread_input(df).select(
         "doc_id", F.explode(_shingle_arr(text_col, shingle_n)).alias("shingle")
     )
     hashed = sh.select(
@@ -190,60 +176,63 @@ def _bh_arr_col(k: int, bands: int):
     return F.array(*cols)
 
 
-def _min_band_pairs(sigw: DataFrame, k: int, bands: int) -> DataFrame:
-    """LSH candidate pairs (doc_a, doc_b), DISTINCT BY CONSTRUCTION.
+def _first_shared_pairs(
+    df: DataFrame, id_col: str, arr_col: str, n: int
+) -> DataFrame:
+    """Pairs of rows whose ``n``-element ``arr_col`` arrays agree in at
+    least one position, DISTINCT BY CONSTRUCTION — the one candidate
+    generator of the LSH (band hashes) and SimHash (pigeonhole chunks)
+    families. Returns the joined ``a``/``b`` aliases; callers pick
+    their columns (``a.<id_col>`` < ``b.<id_col>``).
 
-    A pair colliding in several bands used to be emitted once per band
-    and deduplicated with a full ``distinct()`` — on collision-heavy
-    corpora that exchange dwarfs everything else in the query (measured
-    202 MB / ~30M rows at sf0.1 against 45 MB of distinct pairs). Here
-    each side carries its band-hash array and the join emits a pair
-    only from the SMALLEST band where the two hashes agree (an
-    unrolled prefix comparison), so every colliding pair appears
-    exactly once and no dedup exchange is needed (guide §2.4/§2.3: shuffle
-    keys and metadata, not the expansion). The candidate SET is
-    identical: pair shares >= 1 band <=> pair has a smallest shared
-    band. Cost: the banded rows carry ``bands`` longs instead of one —
-    O(n x bands) extra bytes through one small exchange, traded
-    against the O(sum bucket-size^2) dedup shuffle."""
-    banded = sigw.select(
-        "doc_id", _bh_arr_col(k, bands).alias("bh_arr")
-    ).localCheckpoint(eager=False)
+    The array is posexploded and spread by ``(pos, val)``, then
+    self-joined on ``(pos, val, a.id < b.id)``; a pair is kept only
+    from the FIRST position where the two arrays agree, so each pair
+    appears exactly once and no dedup exchange follows. A per-position
+    emission deduplicated with a full ``distinct()`` paid an exchange
+    that dwarfed everything else in the query on collision-heavy
+    corpora (measured 202 MB / ~30M rows at sf0.1 against 45 MB of
+    distinct pairs). The pair SET is identical: a pair shares >= 1
+    position <=> it has a first shared position. Cost: each exploded
+    row carries the whole array — O(rows x n) extra bytes through one
+    small exchange.
+
+    "No earlier shared position" is UNROLLED over the (small,
+    build-time constant) ``n`` into plain element_at comparisons: a
+    higher-order exists/zip_with/slice filter is interpreted (HOFs
+    never enter whole-stage codegen) and allocates two sliced arrays
+    per CANDIDATE row — measured 2.5x the whole LSH query at sf0.1.
+    The unrolled form is branch-free long compares."""
     e = _spread(
-        banded.select(
-            "doc_id", "bh_arr", F.posexplode("bh_arr").alias("band", "bh")
-        ),
-        "band",
-        "bh",
+        df.select("*", F.posexplode(arr_col).alias("pos", "val")), "pos", "val"
     )
     a = e.alias("a")
     b = e.alias("b")
-    # "no earlier shared band", UNROLLED over the (small, build-time
-    # constant) band count into plain element_at comparisons: a
-    # higher-order exists/zip_with/slice filter here is interpreted
-    # (HOFs never enter whole-stage codegen) and allocates two sliced
-    # arrays per CANDIDATE row — measured 2.5x the whole query at
-    # sf0.1. The unrolled form is branch-free long compares.
-    earlier_collision = F.lit(False)
-    for j in range(bands - 1):
-        earlier_collision = earlier_collision | (
-            (F.lit(j) < F.col("a.band"))
+    earlier = F.lit(False)
+    for j in range(n - 1):
+        earlier = earlier | (
+            (F.lit(j) < F.col("a.pos"))
             & (
-                F.element_at(F.col("a.bh_arr"), j + 1)
-                == F.element_at(F.col("b.bh_arr"), j + 1)
+                F.element_at(F.col(f"a.{arr_col}"), j + 1)
+                == F.element_at(F.col(f"b.{arr_col}"), j + 1)
             )
         )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(~earlier_collision)
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+    return a.join(
+        b,
+        (F.col("a.pos") == F.col("b.pos"))
+        & (F.col("a.val") == F.col("b.val"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).where(~earlier)
+
+
+def _min_band_pairs(sigw: DataFrame, k: int, bands: int) -> DataFrame:
+    """LSH candidate pairs (doc_a, doc_b): docs sharing >= 1 band hash,
+    each pair once (``_first_shared_pairs``)."""
+    banded = sigw.select(
+        "doc_id", _bh_arr_col(k, bands).alias("bh_arr")
+    ).localCheckpoint(eager=False)
+    return _first_shared_pairs(banded, "doc_id", "bh_arr", bands).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
 
 
@@ -255,11 +244,12 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
 ) -> DataFrame:
     """LSH banding: candidate pairs share any band bucket. Self-join is
-    on the (band, bh) equi-key — a primitive BIGINT hash, bucketable at
-    scale, never a cross join; pairs are emitted from their smallest
-    shared band, so the output is distinct with NO dedup exchange
-    (see _min_band_pairs; the checkpoint inside it lineage-truncates
-    before the self-join so the shingle/minhash pipeline runs once)."""
+    on the (band index, band hash) equi-key — a primitive BIGINT hash,
+    bucketable at scale, never a cross join; pairs are emitted from
+    their smallest shared band, so the output is distinct with NO dedup
+    exchange (see _first_shared_pairs; the checkpoint in
+    _min_band_pairs lineage-truncates before the self-join so the
+    shingle/minhash pipeline runs once)."""
     return _min_band_pairs(_sig_wide(df, text_col, k, shingle_n), k, bands)
 
 
@@ -275,11 +265,11 @@ def _jaccard_set_graph(
     exact shingle set, LSH-gate candidate SET pairs over one
     representative per set, exact-verify each candidate set pair.
 
-    Returns ``(members, rep_ids, verified)``:
+    Returns ``(members, rep_members, verified)``:
     - ``members``: (set_key, doc_id, sz) — every doc with its set group;
-    - ``rep_ids``: (set_key, doc_id) — the representative (min doc_id)
-      per distinct set, already derived from the checkpointed members
-      (returned so callers don't recompute the identical aggregation);
+    - ``rep_members``: members plus ``rep``, the representative (min
+      doc_id) of the doc's set, from the same aggregation the reps
+      below use (so callers don't recompute it);
     - ``verified``: (rep_a, rep_b, inter, vsz_a, vsz_b, jaccard) — set
       pairs (identified by their representatives' doc_ids) with exact
       Jaccard >= threshold.
@@ -308,7 +298,7 @@ def _jaccard_set_graph(
     localCheckpoint for ``checkpoint()`` on reliable storage (same
     note as operators/graph.py).
     """
-    sets_ = _spread_input(df).select(
+    sets_ = spread_input(df).select(
         "doc_id", F.sort_array(_shingle_arr(text_col, shingle_n)).alias("sh")
     ).withColumn("set_key", F.md5(F.concat_ws("\x1f", "sh")))
     members = sets_.select(
@@ -419,7 +409,36 @@ def _jaccard_set_graph(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    return members, rep_ids, verified
+    rep_members = members.join(
+        rep_ids.withColumnRenamed("doc_id", "rep"), "set_key"
+    )
+    return members, rep_members, verified
+
+
+def _doc_pairs(verified: DataFrame, rep_members: DataFrame, *cols) -> DataFrame:
+    """Expand verified rep pairs ``(rep_a, rep_b, ...)`` to doc pairs
+    ``(doc_a, doc_b, *cols)`` through ``rep_members`` ``(doc_id, rep)``;
+    ``cols`` may refer to each side's doc id as ``da``/``db``.
+
+    Output-bound work, so the membership table is BROADCAST: the pairs
+    views are only usable where the pair output itself fits (see
+    jaccard_pairs' SCALE WARNING), and the membership is at most one
+    row per doc — strictly smaller than the output — so the broadcast
+    is bounded by the same contract. It keeps the exploding joins
+    map-side, preserving the verified table's parallelism instead of
+    re-shuffling the expansion through a coalesced exchange (guide
+    §3.1)."""
+    m1 = rep_members.select(F.col("rep").alias("rep_a"), F.col("doc_id").alias("da"))
+    m2 = rep_members.select(F.col("rep").alias("rep_b"), F.col("doc_id").alias("db"))
+    return (
+        verified.join(F.broadcast(m1), "rep_a")
+        .join(F.broadcast(m2), "rep_b")
+        .select(
+            F.least("da", "db").alias("doc_a"),
+            F.greatest("da", "db").alias("doc_b"),
+            *cols,
+        )
+    )
 
 
 def jaccard_pairs(
@@ -446,39 +465,21 @@ def jaccard_pairs(
     matches exactly. Pairs the LSH misses are absent from the output —
     a documented approximation, mirrored exactly by the oracle.
     """
-    members, _rep_ids, verified = _jaccard_set_graph(
+    members, rep_members, verified = _jaccard_set_graph(
         df, text_col, threshold, shingle_n, k, bands
     )
-    # expand set pairs to doc pairs (output-bound work). The membership
-    # table is BROADCAST: the pairs view is only usable where the pair
-    # output itself fits (SCALE WARNING above), and members is at most
-    # one row per doc — strictly smaller than the output — so the
-    # broadcast is bounded by the same contract. It keeps the exploding
-    # joins map-side, preserving the verified table's parallelism
-    # instead of re-shuffling the expansion through a coalesced
-    # exchange (guide §3.1).
-    rep_members = members.join(
-        _rep_ids.withColumnRenamed("doc_id", "rep"), "set_key"
+    out = _doc_pairs(
+        verified,
+        rep_members,
+        "inter",
+        F.when(F.col("da") < F.col("db"), F.col("vsz_a"))
+        .otherwise(F.col("vsz_b"))
+        .alias("sz_a"),
+        F.when(F.col("da") < F.col("db"), F.col("vsz_b"))
+        .otherwise(F.col("vsz_a"))
+        .alias("sz_b"),
+        "jaccard",
     )
-    m1 = rep_members.select(F.col("rep").alias("rep_a"), F.col("doc_id").alias("da"))
-    m2 = rep_members.select(F.col("rep").alias("rep_b"), F.col("doc_id").alias("db"))
-    cross = (
-        verified.join(F.broadcast(m1), "rep_a")
-        .join(F.broadcast(m2), "rep_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "inter",
-            F.when(F.col("da") < F.col("db"), F.col("vsz_a"))
-            .otherwise(F.col("vsz_b"))
-            .alias("sz_a"),
-            F.when(F.col("da") < F.col("db"), F.col("vsz_b"))
-            .otherwise(F.col("vsz_a"))
-            .alias("sz_b"),
-            "jaccard",
-        )
-    )
-    out = cross
     if threshold <= 1.0:
         within = (
             members.alias("x")
@@ -497,7 +498,7 @@ def jaccard_pairs(
                 F.lit(1.0).alias("jaccard"),
             )
         )
-        out = cross.unionByName(within)
+        out = out.unionByName(within)
     return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
 
 
@@ -747,6 +748,42 @@ def embedding_near_dup(
     )
 
 
+def _clusters(
+    members: DataFrame,
+    edges: DataFrame,
+    id_col: str,
+    extra: DataFrame | None = None,
+) -> DataFrame:
+    """The one cluster tail: connected components over the rep graph
+    ``edges`` (rep_a, rep_b), one ``(id_col, canonical_id,
+    cluster_size, is_dup)`` row per ``members`` (id_col, rep) row plus
+    the pre-assigned ``extra`` (id_col, canonical_id) rows.
+    ``canonical_id`` is the min id of the component (transitive
+    closure, keep-one contract). Calls through the ``graph`` module
+    attribute, so a wrapper installed there (span tracing) sees it."""
+    comp = graph.connected_components(
+        edges,
+        src="rep_a",
+        dst="rep_b",
+        nodes=members.select("rep").distinct(),
+        node_col="rep",
+    )
+    assign = members.join(comp, members["rep"] == comp["node"]).select(
+        id_col, F.col("component").alias("canonical_id")
+    )
+    if extra is not None:
+        assign = assign.unionByName(extra)
+    sizes = assign.groupBy("canonical_id").agg(
+        F.count(F.lit(1)).alias("cluster_size")
+    )
+    return assign.join(sizes, "canonical_id").select(
+        id_col,
+        "canonical_id",
+        "cluster_size",
+        (F.col(id_col) != F.col("canonical_id")).alias("is_dup"),
+    )
+
+
 def near_dup_clusters(
     df: DataFrame,
     text_col: str = "text",
@@ -775,42 +812,16 @@ def near_dup_clusters(
     A group of n identical docs therefore costs one graph node and
     emits n assignment rows — vs n(n-1)/2 pair rows from
     ``jaccard_pairs`` (the debug view)."""
-    from debezium_partial_snapshotter_spark.operators.graph import (
-        connected_components,
-    )
-
-    members, rep_ids, verified = _jaccard_set_graph(
+    members, rep_members, verified = _jaccard_set_graph(
         df, text_col, threshold, shingle_n, k, bands
     )
-    # the helper already aggregated the per-set representative —
-    # recomputing the groupBy here would pay a redundant wide
-    # aggregation per query (round-3 review finding)
-    rep_of = rep_ids.withColumnRenamed("doc_id", "rep")
-    nonempty = members.where(F.col("sz") > 0)
-    comp = connected_components(
-        verified.select("rep_a", "rep_b"),
-        src="rep_a",
-        dst="rep_b",
-        nodes=nonempty.join(rep_of, "set_key").select("rep").distinct(),
-        node_col="rep",
-    )
-    assigned = (
-        nonempty.join(rep_of, "set_key")
-        .join(comp, F.col("rep") == comp["node"])
-        .select("doc_id", F.col("component").alias("canonical_id"))
-    )
-    singletons = members.where(F.col("sz") == 0).select(
-        "doc_id", F.col("doc_id").alias("canonical_id")
-    )
-    assign = assigned.unionByName(singletons)
-    sizes = assign.groupBy("canonical_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return assign.join(sizes, "canonical_id").select(
+    return _clusters(
+        rep_members.where(F.col("sz") > 0).select("doc_id", "rep"),
+        verified,
         "doc_id",
-        "canonical_id",
-        "cluster_size",
-        (F.col("doc_id") != F.col("canonical_id")).alias("is_dup"),
+        extra=members.where(F.col("sz") == 0).select(
+            "doc_id", F.col("doc_id").alias("canonical_id")
+        ),
     )
 
 
@@ -832,10 +843,6 @@ def embedding_near_dup_clusters(
     n(n-1)/2 within-bucket pairs. Group members share their rep's
     cosine edges exactly (identical vectors), so the declarative oracle
     without canonicalization produces the same clusters."""
-    from debezium_partial_snapshotter_spark.operators.graph import (
-        connected_components,
-    )
-
     # checkpointed: groups feeds both members and reps, members feeds
     # both the vertex set and the final assignment join (see
     # _jaccard_set_graph for why exchange reuse doesn't cover this)
@@ -843,30 +850,14 @@ def embedding_near_dup_clusters(
         eager=False
     )
     members = (
-        emb.join(groups, vec_col)
-        .select(F.col(id_col).alias("vid"), "rep")
-        .localCheckpoint(eager=False)
+        emb.join(groups, vec_col).select(id_col, "rep").localCheckpoint(eager=False)
     )
     reps = groups.select(F.col("rep").alias(id_col), F.col(vec_col))
     pairs = embedding_near_dup(reps, id_col, vec_col, threshold, planes)
-    comp = connected_components(
-        pairs.select("id_a", "id_b"),
-        src="id_a",
-        dst="id_b",
-        nodes=members.select("rep").distinct(),
-        node_col="rep",
-    )
-    assign = members.join(comp, members["rep"] == comp["node"]).select(
-        F.col("vid").alias(id_col), F.col("component").alias("canonical_id")
-    )
-    sizes = assign.groupBy("canonical_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return assign.join(sizes, "canonical_id").select(
+    return _clusters(
+        members,
+        pairs.select(F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b")),
         id_col,
-        "canonical_id",
-        "cluster_size",
-        (F.col(id_col) != F.col("canonical_id")).alias("is_dup"),
     )
 
 
@@ -891,10 +882,10 @@ def _simhash_graph(
       pairs with hamming <= max_hamming.
     Docs whose text contains no words produce no fingerprint and are
     absent (mirrored by the SQL oracle)."""
-    nb_chunks = max_hamming + 1
-    if nb_chunks > bits:
+    nb = max_hamming + 1
+    if nb > bits:
         raise ValueError(
-            f"max_hamming={max_hamming} needs {nb_chunks} pigeonhole "
+            f"max_hamming={max_hamming} needs {nb} pigeonhole "
             f"chunks but the fingerprint has only {bits} bits"
         )
     sig = simhash(df, text_col, bits).localCheckpoint(eager=False)
@@ -905,7 +896,6 @@ def _simhash_graph(
     )
     members = sig.join(groups, "simhash").select("doc_id", "simhash", "rep")
 
-    nb = nb_chunks
     base = bits // nb
     chunk_cols = []
     for i in range(nb):
@@ -913,42 +903,9 @@ def _simhash_graph(
         width = bits - lo if i == nb - 1 else base
         mask = (1 << width) - 1
         chunk_cols.append(F.expr(f"shiftright(simhash, {lo}) & {mask}"))
-    # smallest-shared-chunk emission (same dedup-free candidate trick
-    # as _min_band_pairs): each side carries its chunk-value array and
-    # a pair is emitted only from the first chunk the two fingerprints
-    # agree on — distinct by construction, no dedup exchange
-    chunked = _spread(
-        groups.select(
-            "rep",
-            "simhash",
-            F.array(*chunk_cols).alias("cv_arr"),
-        ).select(
-            "rep", "simhash", "cv_arr", F.posexplode("cv_arr").alias("ci", "cv")
-        ),
-        "ci",
-        "cv",
-    )
-    a = chunked.alias("a")
-    b = chunked.alias("b")
-    # unrolled "no earlier shared chunk" — see _min_band_pairs for why
-    # this is element_at compares, not a HOF filter
-    earlier_chunk = F.lit(False)
-    for j in range(nb - 1):
-        earlier_chunk = earlier_chunk | (
-            (F.lit(j) < F.col("a.ci"))
-            & (
-                F.element_at(F.col("a.cv_arr"), j + 1)
-                == F.element_at(F.col("b.cv_arr"), j + 1)
-            )
-        )
+    chunked = groups.select("rep", "simhash", F.array(*chunk_cols).alias("cv_arr"))
     verified = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .where(~earlier_chunk)
+        _first_shared_pairs(chunked, "rep", "cv_arr", nb)
         .select(
             F.col("a.rep").alias("rep_a"),
             F.col("b.rep").alias("rep_b"),
@@ -977,19 +934,6 @@ def simhash_near_dup(
     Full recall at hamming <= max_hamming (pigeonhole banding is
     exhaustive, unlike probabilistic MinHash LSH)."""
     members, verified = _simhash_graph(df, text_col, bits, max_hamming)
-    # broadcast expansion: same bounded-by-the-output argument as
-    # jaccard_pairs (members <= pairs view's own output size)
-    m1 = members.select(F.col("rep").alias("rep_a"), F.col("doc_id").alias("da"))
-    m2 = members.select(F.col("rep").alias("rep_b"), F.col("doc_id").alias("db"))
-    cross = (
-        verified.join(F.broadcast(m1), "rep_a")
-        .join(F.broadcast(m2), "rep_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "hamming",
-        )
-    )
     within = (
         members.alias("x")
         .join(
@@ -1003,7 +947,7 @@ def simhash_near_dup(
             F.lit(0).cast("long").alias("hamming"),
         )
     )
-    return cross.unionByName(within)
+    return _doc_pairs(verified, members, "hamming").unionByName(within)
 
 
 def simhash_clusters(
@@ -1017,27 +961,5 @@ def simhash_clusters(
     the min doc_id of the connected component of the verified
     hamming-<=d rep graph (transitive closure, keep-one contract —
     same shape as near_dup_clusters / embedding_near_dup_clusters)."""
-    from debezium_partial_snapshotter_spark.operators.graph import (
-        connected_components,
-    )
-
     members, verified = _simhash_graph(df, text_col, bits, max_hamming)
-    comp = connected_components(
-        verified.select("rep_a", "rep_b"),
-        src="rep_a",
-        dst="rep_b",
-        nodes=members.select("rep").distinct(),
-        node_col="rep",
-    )
-    assign = members.join(comp, members["rep"] == comp["node"]).select(
-        "doc_id", F.col("component").alias("canonical_id")
-    )
-    sizes = assign.groupBy("canonical_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return assign.join(sizes, "canonical_id").select(
-        "doc_id",
-        "canonical_id",
-        "cluster_size",
-        (F.col("doc_id") != F.col("canonical_id")).alias("is_dup"),
-    )
+    return _clusters(members, verified, "doc_id")

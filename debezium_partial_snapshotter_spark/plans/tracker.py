@@ -51,8 +51,17 @@ ARROW_SCHEMA = pa.schema(
 
 _COLS = [f.name for f in ARROW_SCHEMA]
 
+#: optimistic-CAS attempts per transition
+_TRIES = 8
+
 
 class SnapshotTracker:
+    #: versions retained after a committed transition; older ones are
+    #: unlinked, so the directory (listed on every current_version())
+    #: stays bounded instead of growing one file per transition
+    #: forever — the same policy as ChangefeedReader.KEEP_SEQS.
+    KEEP_VERSIONS = 8
+
     def __init__(self, path: str):
         self.path = path
 
@@ -103,10 +112,20 @@ class SnapshotTracker:
         if not _atomic_create(tmp, final):
             raise CommitConflict(f"tracker version {version} exists")
 
-    def _transact(self, fn, max_retries: int = 8):
+    def _gc_versions(self) -> None:
+        """Best-effort unlink of all but the newest KEEP_VERSIONS
+        versions. Runs only after a committed transition, so the
+        version current_version() reads is always retained."""
+        for v in self._versions()[: -self.KEEP_VERSIONS]:
+            try:
+                os.unlink(os.path.join(self.path, f"v{v:08d}.parquet"))
+            except OSError:
+                pass
+
+    def _transact(self, fn):
         """BEGIN .. COMMIT analog (PostgresJdbcFilterHandler.java:73-137):
         optimistic read-modify-write with CAS retry."""
-        for attempt in range(max_retries):
+        for attempt in range(_TRIES):
             v = self.current_version()
             df = self.load(v)
             new_df, result = fn(df.copy())
@@ -114,11 +133,13 @@ class SnapshotTracker:
                 return result
             try:
                 self._write_version(new_df, v + 1)
-                return result
             except CommitConflict:
-                if attempt == max_retries - 1:
+                if attempt == _TRIES - 1:
                     raise
                 time.sleep(0.02 * (attempt + 1))
+            else:
+                self._gc_versions()
+                return result
 
     # --------------------------------------------------------- operations
     def connector_is_tracked(self, pipeline_id: str) -> bool:

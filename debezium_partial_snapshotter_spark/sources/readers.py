@@ -46,12 +46,7 @@ class ParquetWalSource:
         self.event_schema = event_schema
 
     # ---- B1: bounded snapshot scan of claimed buckets at a watermark ----
-    def snapshot(
-        self,
-        buckets: list[int] | None,
-        watermark_lsn: int,
-        tag_last: bool = False,
-    ) -> DataFrame:
+    def snapshot(self, buckets: list[int] | None, watermark_lsn: int) -> DataFrame:
         """SELECT * of the claimed partitions, emitted as 'r' events at
         the snapshot watermark. Bucket filtering happens IN the scan
         plan (predicate over bucket_id(doc_id)), so unclaimed partitions
@@ -63,31 +58,12 @@ class ParquetWalSource:
         if buckets is not None:
             payload = payload.where(b.isin([int(x) for x in buckets]))
         after_fields = [f.name for f in payload.schema.fields]
-        # reference-parity OPTION: tag the FINAL snapshot row
-        # source.snapshot='last' (PartialSnapshotterTest.java:426-431).
-        # A distributed scan has no row order, so "last" = the
-        # max-doc_id row — deterministic, exactly one row, computed by
-        # a column-pruned pre-scan. Opt-in: the engine itself never
-        # reads the tag, and the pre-scan is a whole extra source pass
-        # per snapshot epoch — pay it only when a downstream consumer
-        # (reference-compatible tooling) needs the marker.
-        if tag_last:
-            last_id = payload.agg(F.max("doc_id")).collect()[0][0]
-            snap_col = (
-                F.when(F.col("doc_id") == F.lit(last_id), "last")
-                .otherwise("true")
-                .alias("snapshot")
-            )
-        else:
-            snap_col = F.lit("true").alias("snapshot")
         return payload.select(
             F.lit("r").alias("op"),
             F.col("doc_id"),
             F.lit(watermark_lsn).cast("long").alias("lsn"),
-            snap_col,
-            table_partition(self.table, bucket_id(F.col("doc_id"), self.num_buckets)).alias(
-                "table_partition"
-            ),
+            F.lit("true").alias("snapshot"),
+            table_partition(self.table, b).alias("table_partition"),
             F.struct(*[F.col(c) for c in after_fields]).alias("after"),
         )
 

@@ -6,9 +6,11 @@ transitive-closure cluster semantics."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_partial_snapshotter_spark.operators.dedup_docs import (
+    _first_shared_pairs,
     embedding_near_dup_clusters,
     jaccard_pairs,
     near_dup_clusters,
@@ -32,6 +34,32 @@ def _uf_components(n_nodes, edges):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {x: find(x) for x in range(n_nodes)}
+
+
+@pytest.mark.parametrize("n", [1, 4, 8])
+def test_first_shared_pairs_matches_brute_force(spark, n):
+    """The LSH/SimHash candidate kernel emits each pair sharing >= 1
+    array position exactly once, also when the two arrays agree in
+    several positions (a 3-value alphabet makes that the common case)."""
+    rng = random.Random(n)
+    rows = [(i, [rng.randrange(3) for _ in range(n)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, arr array<long>")
+    got = [
+        (r["a"], r["b"])
+        for r in _first_shared_pairs(df, "id", "arr", n)
+        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
+        .collect()
+    ]
+    shared = {
+        (x, y): sum(u == v for u, v in zip(ax, ay))
+        for x, ax in rows
+        for y, ay in rows
+        if x < y
+    }
+    assert len(got) == len(set(got))
+    assert set(got) == {p for p, c in shared.items() if c >= 1}
+    if n > 1:
+        assert sum(c >= 2 for c in shared.values()) > 100
 
 
 def test_cc_matches_union_find_on_random_graphs(spark):

@@ -266,3 +266,22 @@ def test_tracker_error_policy(spark, env, monkeypatch):
     out2 = runner.snapshot_epoch()  # fail-open: snapshot everything
     assert out2["applied"]
     assert_state_matches(spark, runner.table, state_as_expected(env["state"]))
+
+
+# bounded control-table history: every transition writes a version, so
+# without GC the directory (listed on every read) grows forever
+def test_tracker_version_history_is_garbage_collected(tmp_path):
+    tr = SnapshotTracker.create(str(tmp_path / "tracker"))
+    parts = [f"tokens/{b:04d}" for b in range(NB)]
+    tr.claim(parts, "p1", record_only=True)
+    expected = dict.fromkeys(parts, False)
+    for i in range(50):
+        p, needs = parts[i % NB], (i // NB) % 2 == 0
+        assert tr.set_needs([p], "p1", needs=needs) == 1
+        expected[p] = needs
+    versions = [f for f in os.listdir(tr.path) if f.startswith("v")]
+    assert len(versions) <= 8  # SnapshotTracker.KEEP_VERSIONS
+    assert tr.current_version() == 52  # create + claim + 50 transitions
+    st = tr.state("p1")
+    assert dict(zip(st["table_partition"], st["needs_snapshot"])) == expected
+    assert not st["under_snapshot"].any()
