@@ -16,9 +16,10 @@ copy-on-write:
 3. one atomic manifest swap commits data + schema evolution + the
    exactly-once commit key together.
 
-The apply shuffles each affected bucket's rows exactly once (the
-per-key max plus its hash join-back) — no window over the whole table,
-no driver-side row loops.
+The merge shuffles each affected bucket's rows once (the per-key max
+plus its hash join-back), and the commit's write shuffles the winners
+once more on ``_bucket`` — no window over the whole table, no
+driver-side row loops.
 """
 
 from __future__ import annotations

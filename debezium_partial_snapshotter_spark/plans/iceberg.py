@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from debezium_partial_snapshotter_spark.plans.lake import CommitConflict
+from debezium_partial_snapshotter_spark.plans.lake import COMPACT_MIN_FILES, CommitConflict
 
 COMMIT_KEY_PROP = "dps.commit-key"
 WATERMARK_PROP = "dps.watermark-lsn"
@@ -817,17 +817,17 @@ class IcebergTable:
             "already maintains."
         )
 
-    def compact(self, spark: SparkSession, min_files: int = 2, commit_key=None) -> dict:
+    def compact(self, spark: SparkSession) -> dict:
         """rewrite_data_files with the min-input-files threshold mapped
-        from ``min_files``. ``commit_key`` is not recorded: the rewrite
-        is content-idempotent maintenance (re-running it is a no-op by
-        construction), unlike data commits. Contract-shaped return
+        from ``COMPACT_MIN_FILES``. No commit key is recorded: the
+        rewrite is content-idempotent maintenance (re-running it is a
+        no-op by construction), unlike data commits. Contract-shaped return
         (compacted_buckets: list — Iceberg decides file grouping
         internally, so the list is empty rather than a fake)."""
         spark.sql(
             f"CALL {self._catalog()}.system.rewrite_data_files"
             f"(table => '{self._table_path()}', "
-            f"options => map('min-input-files', '{int(min_files)}'))"
+            f"options => map('min-input-files', '{COMPACT_MIN_FILES}'))"
         )
         return {"compacted_buckets": [], "applied": True,
                 "procedure": "rewrite_data_files"}

@@ -70,6 +70,10 @@ MAX_COMMIT_KEYS = 512
 _CAS_TRIES = 5
 _REPLAN_TRIES = 3
 
+#: ``compact`` rewrites a bucket whose base holds at least this many
+#: files (and every bucket carrying MoR deltas) into one file.
+COMPACT_MIN_FILES = 2
+
 
 class CommitConflict(Exception):
     pass
@@ -566,10 +570,16 @@ class LakeTable:
         self, df: DataFrame, commit_dir: str, affected_buckets: list[int]
     ) -> dict[str, list[str]]:
         """Write df (carrying int ``_bucket``) under ``commit_dir``, one
-        file per bucket (one shuffle on _bucket co-locates each
-        bucket's rows); returns bucket -> relative file list."""
+        file per bucket: one shuffle on _bucket co-locates each bucket's
+        rows in one of at most ``spark.sql.shuffle.partitions`` write
+        tasks, and ``partitionBy`` splits each task's output into one
+        file per bucket it holds. A task per bucket instead (32 tasks on
+        4 cores for a 32-bucket commit) cost 0.3-0.4 s more per write
+        at 1,000-8,000 rows (4 vCPU); returns bucket -> relative file
+        list."""
+        slots = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         (
-            df.repartition(max(1, len(affected_buckets)), "_bucket")
+            df.repartition(max(1, min(len(affected_buckets), slots)), "_bucket")
             .write.partitionBy("_bucket")
             .option("maxRecordsPerFile", 0)
             .mode("overwrite")
@@ -952,19 +962,18 @@ class LakeTable:
     def to_pandas(self, spark: SparkSession):
         return self.read(spark).toPandas()
 
-    def compact(
-        self, spark: SparkSession, min_files: int = 2, commit_key: str | None = None
-    ) -> dict:
+    def compact(self, spark: SparkSession) -> dict:
         """Small-file maintenance: rewrite every bucket holding >=
-        min_files data files into one file each (Iceberg rewrite_data_files
-        analog). A no-op when the layout is already tight."""
+        ``COMPACT_MIN_FILES`` data files, or any MoR delta, into one
+        file each (Iceberg rewrite_data_files analog). A no-op when the
+        layout is already tight."""
         base_version = self.current_version()
         man = self.manifest(base_version)
         targets = sorted(
             {
                 int(b)
                 for b, files in man["buckets"].items()
-                if len(files) >= min_files
+                if len(files) >= COMPACT_MIN_FILES
             }
             | {int(b) for b in man.get("deltas", {})}  # fold MoR deltas
         )
@@ -977,7 +986,7 @@ class LakeTable:
         # concurrent delta commit makes this raise instead of being
         # silently dropped; callers re-run compaction.
         applied = self.replace_buckets(
-            df, targets, commit_key=commit_key, expected_version=base_version,
+            df, targets, expected_version=base_version,
             # content-neutral marker: compaction folds existing winners
             # into the base without changing logical content, so the
             # changefeed delta fast path may skip this commit

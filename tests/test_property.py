@@ -106,11 +106,8 @@ def test_partition_include_exclude(spark, tmp_warehouse):
 
 
 def test_compaction(spark, tmp_warehouse):
-    """Force a multi-file bucket layout, compact, verify identical
-    content and fewer files."""
-    from debezium_partial_snapshotter_spark.functions import bucket_id
-    import pyspark.sql.functions as F
-
+    """Register bucket 0 as two files with disjoint keys, compact, and
+    verify identical content in one file."""
     spec = EventLogSpec(n_docs=50, n_events=200, n_segments=1, seed=9, num_buckets=2)
     wal = generate_change_log(spec)
     d = os.path.join(tmp_warehouse, "log")
@@ -121,21 +118,30 @@ def test_compaction(spark, tmp_warehouse):
     )
     apply_batch(table, load_events(spark, d), commit_key="p:0")
 
-    # manually fragment bucket 0: write its rows again as extra files
-    man = table.manifest()
-    cur = table.read(spark, buckets=[0]).withColumn(
-        "_bucket", bucket_id(F.col("doc_id"), 2)
+    # fragment bucket 0: its rows split by key into two files, swapped
+    # in as the bucket's base in one manifest commit
+    cur = table.read(spark, buckets=[0])
+    keys = sorted(r["doc_id"] for r in cur.select("doc_id").collect())
+    assert len(keys) >= 2
+    mid = keys[len(keys) // 2]
+    files = []
+    for name, part in (("a", cur.where(cur.doc_id < mid)),
+                       ("b", cur.where(cur.doc_id >= mid))):
+        out_dir = os.path.join(table.data_dir, f"frag-{name}")
+        part.coalesce(1).write.parquet(out_dir)
+        files += [
+            os.path.relpath(os.path.join(out_dir, f), table.path)
+            for f in os.listdir(out_dir)
+            if f.endswith(".parquet")
+        ]
+    assert table._transact(
+        lambda man: {"buckets": {**man["buckets"], "0": files}, "touched": [0]}
     )
-    # split into 3 files by re-writing with 3 partitions
-    table.replace_buckets(cur.repartition(3), [0])
-    # fragmented manifest has more files for bucket 0 than before? (the
-    # repartition(3) write makes up to 3 files)
-    files_before = len(table.manifest()["buckets"]["0"])
+    assert len(table.manifest()["buckets"]["0"]) == 2
 
     before = table.read(spark).orderBy("doc_id").toPandas()
-    out = table.compact(spark, min_files=2)
+    out = table.compact(spark)
     after = table.read(spark).orderBy("doc_id").toPandas()
-    files_after = max(len(v) for v in table.manifest()["buckets"].values())
+    assert out["applied"] and out["compacted_buckets"] == [0]
+    assert len(table.manifest()["buckets"]["0"]) == 1
     assert after.equals(before)
-    if files_before >= 2:
-        assert out["applied"] and files_after == 1
