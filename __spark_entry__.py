@@ -2436,9 +2436,6 @@ def _changefeed_scaffold_build(spark, sf_dir, wh, write_mode, tail_fracs):
         warehouse=os.path.join(wh, "wh"),
         num_buckets=nb,
         write_mode=write_mode,
-        # the delta row pins the FAST PATH: keep auto-compaction out of
-        # the polled range (24-file default would fire on the 3rd tail)
-        mor_compact_threshold=1_000_000,
     )
     src = ParquetWalSource(
         spark, state_path, log_dir, num_buckets=nb,

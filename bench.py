@@ -11,9 +11,8 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 The headline metric is the north-rule one: change-events/sec applied
 replaying a deterministic event log through the full engine (snapshot
-epoch + tail epochs, exactly-once commits). scripts/scaling_bench.py
-runs THIS script at two parallelism levels for the scaling-efficiency
-evidence (BENCH/BASELINE.md).
+epoch + tail epochs, exactly-once commits). BENCH/BASELINE.md records
+the scaling-efficiency evidence taken with it at two parallelism levels.
 
 Note: `jaccard_pairs` re-entered the timed set in round 2 (LSH-gated
 + set-canonicalized). Round 3 found most of its round-2 cost was
@@ -39,7 +38,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # Off-heap Tungsten + off-heap parquet column vectors by default for
 # the bench: measured +59% best / +68% median replay throughput at
-# local[32] and neutral at local[8] (round-3 A/B, scripts/offheap_ab.py
+# local[32] and neutral at local[8] (round-3 A/B, BENCH/BASELINE.md
 # — the GC/allocation wall was the 32-thread bottleneck). Override with
 # DPS_OFFHEAP=<size> or disable with DPS_OFFHEAP=0.
 os.environ.setdefault("DPS_OFFHEAP", "20g")

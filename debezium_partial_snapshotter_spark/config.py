@@ -45,11 +45,10 @@ class PipelineConfig:
 
     # write mode: 'cow' rewrites affected buckets per epoch (cheap
     # reads); 'mor' appends delta files with tombstones and resolves at
-    # read time (low write amplification for sparse-touch epochs).
+    # read time (low write amplification for sparse-touch epochs). In
+    # 'mor' the runner folds the deltas once the table reports
+    # compaction due (plans.lake.COMPACT_MAX_DELTAS).
     write_mode: str = "cow"
-    # in 'mor', fold deltas into the base once this many delta files
-    # accumulate across the table
-    mor_compact_threshold: int = 24
 
     # storage reclamation (round 5): when expire_keep_last > 0, the
     # runner expires superseded table versions every

@@ -240,10 +240,10 @@ class ChangefeedReader:
                 # collected delta winners into the base without adding
                 # or removing logical rows, so the feed is unaffected —
                 # skip it instead of bailing to the 2x resolve. The
-                # runner compacts on the ingest cadence
-                # (mor_compact_threshold), so bailing here would cost
-                # most multi-epoch polls the fast path exactly in
-                # production. Pre-compaction delta files already in
+                # runner compacts whenever the table reports it due
+                # (``delta_stats()["compaction_due"]``), so bailing here
+                # would cost every poll whose range spans a compaction
+                # the fast path. Pre-compaction delta files already in
                 # `new_files` stay readable: every chain manifest is
                 # >= from_v >= the horizon, so expire retains their
                 # files. Subsequent commits' append-only checks compare
@@ -585,7 +585,6 @@ class ChangefeedMirror:
         upstream: LakeTable,
         downstream: LakeTable,
         state_dir: str,
-        compact_threshold: int = 24,
         expire_keep_last: int = 0,
         expire_min_age_sec: float = 3600.0,
         expire_every_syncs: int = 8,
@@ -598,15 +597,14 @@ class ChangefeedMirror:
         # Downstream STORAGE HEALTH rides the sync cadence the same way
         # the ingest runner maintains the primary: every MERGE apply
         # appends MoR delta files, so an unmaintained replica's read
-        # cost and file count grow with every sync. `compact_threshold`
-        # folds deltas once they reach that many files (0 disables);
+        # cost and file count grow with every sync. Deltas are folded
+        # under the same rule as the runner's (``compaction_due``);
         # `expire_keep_last` > 0 reclaims superseded versions every
         # `expire_every_syncs` applied syncs, with `expire_min_age_sec`
         # protecting in-flight readers — same semantics/defaults as
         # PipelineConfig's knobs. Exactly-once is untouched: commit
         # keys survive expiration by construction (LakeTable manifest
         # carry-forward).
-        self.compact_threshold = compact_threshold
         self.expire_keep_last = expire_keep_last
         self.expire_min_age_sec = expire_min_age_sec
         self.expire_every_syncs = expire_every_syncs
@@ -673,15 +671,12 @@ class ChangefeedMirror:
         return stats
 
     def _maintain(self, spark: SparkSession) -> dict:
-        """Downstream replica maintenance after an applied sync:
-        threshold-triggered delta compaction, then cadence-triggered
-        version expiration (mirrors the runner's primary-table loop)."""
+        """Downstream replica maintenance after an applied sync: delta
+        compaction once the replica reports it due, then
+        cadence-triggered version expiration (the runner's
+        primary-table rule and loop)."""
         out: dict = {}
-        if (
-            self.compact_threshold
-            and self.downstream.delta_stats()["delta_files"]
-            >= self.compact_threshold
-        ):
+        if self.downstream.delta_stats()["compaction_due"]:
             out["compaction"] = self.downstream.compact(spark)
         if self.expire_keep_last:
             self._syncs_since_expire += 1

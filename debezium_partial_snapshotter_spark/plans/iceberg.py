@@ -38,8 +38,9 @@ Key design points (each fixing a round-1 defect):
   merge-on-read natively (position/equality deletes) under the SAME
   ``replace_buckets`` API when the table property
   ``write.merge.mode=merge-on-read`` is set — an engine-side delta
-  layer on top would duplicate it. ``delta_stats`` reports zero so the
-  runner never schedules engine-side compaction; ``compact()`` maps to
+  layer on top would duplicate it. ``delta_stats`` reports no deltas
+  and never ``compaction_due``, so the runner never schedules
+  engine-side compaction; ``compact()`` maps to
   the ``rewrite_data_files`` procedure.
 
 Requires ``org.apache.iceberg:iceberg-spark-runtime`` on the classpath
@@ -805,7 +806,7 @@ class IcebergTable:
         )
 
     def delta_stats(self) -> dict:
-        return {"buckets_with_deltas": [], "delta_files": 0}
+        return {"buckets_with_deltas": [], "delta_files": 0, "compaction_due": False}
 
     def read_changes(self, *a, **kw):
         raise NotImplementedError(

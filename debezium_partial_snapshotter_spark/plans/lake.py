@@ -74,6 +74,13 @@ _REPLAN_TRIES = 3
 #: files (and every bucket carrying MoR deltas) into one file.
 COMPACT_MIN_FILES = 2
 
+#: A MoR table is due for ``compact`` once any bucket holds this many
+#: delta files. Each delta commit adds at most one file per bucket, so
+#: this counts the delta commits a read of that bucket must resolve,
+#: whatever the bucket count (Hudi's
+#: ``hoodie.compact.inline.max.delta.commits`` default).
+COMPACT_MAX_DELTAS = 5
+
 
 class CommitConflict(Exception):
     pass
@@ -723,10 +730,13 @@ class LakeTable:
         return self._commit_files("deltas", df, affected_buckets, **commit)
 
     def delta_stats(self) -> dict:
-        man = self.manifest()
+        deltas = self.manifest().get("deltas", {})
         return {
-            "buckets_with_deltas": sorted(int(b) for b in man.get("deltas", {})),
-            "delta_files": sum(len(v) for v in man.get("deltas", {}).values()),
+            "buckets_with_deltas": sorted(int(b) for b in deltas),
+            "delta_files": sum(len(v) for v in deltas.values()),
+            "compaction_due": any(
+                len(v) >= COMPACT_MAX_DELTAS for v in deltas.values()
+            ),
         }
 
     def replace_buckets(

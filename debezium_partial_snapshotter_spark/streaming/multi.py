@@ -31,11 +31,11 @@ skipping the other) share one epoch counter and stamp per-table keys
 A but before table B resumes the SAME epoch and skips A idempotently
 while B applies. Per-table lakes stay independently committable and
 readable. Every apply, on every path, goes through ``_apply``: the
-upsert, then MoR compaction once ``mor_compact_threshold`` delta files
-pile up, then expiration every ``expire_every_applies`` applies. Epoch
-numbering is monotonic across restarts; each epoch writes per-bucket
-lineage and metrics rows (B9). ``streaming.runner.PartialIngestRunner``
-is the one-table view.
+upsert, then MoR compaction once the table reports it due
+(``delta_stats()["compaction_due"]``), then expiration every
+``expire_every_applies`` applies. Epoch numbering is monotonic across
+restarts; each epoch writes per-bucket lineage and metrics rows (B9).
+``streaming.runner.PartialIngestRunner`` is the one-table view.
 """
 
 from __future__ import annotations
@@ -213,10 +213,7 @@ class MultiTableIngestRunner:
         stats["commit_key"] = key
         if not stats.get("applied"):
             return stats
-        if (
-            self.cfg.write_mode == "mor"
-            and table.delta_stats()["delta_files"] >= self.cfg.mor_compact_threshold
-        ):
+        if self.cfg.write_mode == "mor" and table.delta_stats()["compaction_due"]:
             stats["compaction"] = table.compact(self.spark)
         if self.cfg.expire_keep_last:
             # storage reclamation rides the ingest loop: every

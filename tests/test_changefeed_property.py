@@ -24,7 +24,7 @@ from debezium_partial_snapshotter_spark.operators.upsert import (
     apply_batch,
     empty_table_for,
 )
-from debezium_partial_snapshotter_spark.plans import changefeed
+from debezium_partial_snapshotter_spark.plans import changefeed, lake
 from debezium_partial_snapshotter_spark.plans.changefeed import (
     ChangefeedMirror,
     apply_feed,
@@ -55,6 +55,9 @@ def _image(spark, table):
 
 
 def test_random_consumer_schedules_converge(spark, tmp_warehouse, monkeypatch):
+    # a replica bucket is due at its second delta, so syncs compact the
+    # mirror inside every schedule
+    monkeypatch.setattr(lake, "COMPACT_MAX_DELTAS", 2)
     for schedule in range(N_SCHEDULES):
         rng = random.Random(1000 + schedule)
         root = os.path.join(tmp_warehouse, f"s{schedule}")
@@ -74,7 +77,7 @@ def test_random_consumer_schedules_converge(spark, tmp_warehouse, monkeypatch):
         up = empty_table_for(os.path.join(root, "up"), TOKENS_SCHEMA, NB)
         down = empty_table_for(os.path.join(root, "down"), TOKENS_SCHEMA, NB)
         sdir = os.path.join(root, "mir")
-        mirror = ChangefeedMirror(up, down, sdir, compact_threshold=3)
+        mirror = ChangefeedMirror(up, down, sdir)
         next_seg = 0
         log = []
 
@@ -126,9 +129,7 @@ def test_random_consumer_schedules_converge(spark, tmp_warehouse, monkeypatch):
             op = rng.choices(names, weights)[0]
             log.append(op)
             if op == "restart":
-                mirror = ChangefeedMirror(
-                    up, down, sdir, compact_threshold=3
-                )
+                mirror = ChangefeedMirror(up, down, sdir)
             else:
                 ops[op]()
 

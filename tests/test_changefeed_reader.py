@@ -19,6 +19,7 @@ from debezium_partial_snapshotter_spark.operators.upsert import (
     apply_batch,
     empty_table_for,
 )
+from debezium_partial_snapshotter_spark.plans import lake
 from debezium_partial_snapshotter_spark.plans.changefeed import (
     ChangefeedReader,
     ConcurrentConsumerError,
@@ -607,9 +608,10 @@ def test_mirror_bootstraps_after_expiration(spark, tmp_warehouse):
     assert m.sync(spark)["applied"] is False
 
 
-def test_mirror_maintains_downstream_storage(spark, tmp_warehouse):
+def test_mirror_maintains_downstream_storage(spark, tmp_warehouse, monkeypatch):
     """Replica storage health rides the sync cadence: MoR deltas the
-    MERGE applies append are compacted past the threshold, superseded
+    MERGE applies append are compacted once a replica bucket holds
+    COMPACT_MAX_DELTAS of them (one here: every sync), superseded
     versions are expired on the configured cadence (bytes genuinely
     reclaimed), and neither touches correctness — the mirror stays
     byte-equal to the upstream and a replayed feed batch is still
@@ -632,10 +634,10 @@ def test_mirror_maintains_downstream_storage(spark, tmp_warehouse):
     down = empty_table_for(
         os.path.join(tmp_warehouse, "down"), TOKENS_SCHEMA, num_buckets=2
     )
+    monkeypatch.setattr(lake, "COMPACT_MAX_DELTAS", 1)
     m = ChangefeedMirror(
         table, down, os.path.join(tmp_warehouse, "mir"),
-        compact_threshold=2, expire_keep_last=1, expire_min_age_sec=0,
-        expire_every_syncs=2,
+        expire_keep_last=1, expire_min_age_sec=0, expire_every_syncs=2,
     )
 
     def du(p):

@@ -11,6 +11,7 @@ from debezium_partial_snapshotter_spark.operators.upsert import (
     apply_batch,
     empty_table_for,
 )
+from debezium_partial_snapshotter_spark.plans import lake
 from debezium_partial_snapshotter_spark.schemas import TOKENS_SCHEMA
 from debezium_partial_snapshotter_spark.sources.eventlog import (
     EventLogSpec,
@@ -25,6 +26,10 @@ from tests.test_replay import assert_state_matches, load_events
 from tests.test_tracker import write_state
 
 NB = 4
+
+
+def _bucket_deltas(table) -> dict[int, int]:
+    return {int(b): len(v) for b, v in table.manifest().get("deltas", {}).items()}
 
 
 def test_mor_replay_matches_oracle_and_compacts(spark, tmp_warehouse):
@@ -70,7 +75,8 @@ def test_mor_replay_matches_oracle_and_compacts(spark, tmp_warehouse):
     assert not r["applied"] and table.current_version() == v
 
 
-def test_mor_runner_auto_compaction(spark, tmp_warehouse):
+def test_mor_runner_auto_compaction(spark, tmp_warehouse, monkeypatch):
+    monkeypatch.setattr(lake, "COMPACT_MAX_DELTAS", 3)
     spec = EventLogSpec(n_docs=80, n_events=600, n_segments=6, seed=23, num_buckets=NB)
     state = generate_initial_state(spec)
     sp = os.path.join(tmp_warehouse, "s.parquet")
@@ -82,17 +88,18 @@ def test_mor_runner_auto_compaction(spark, tmp_warehouse):
         warehouse=os.path.join(tmp_warehouse, "wh"),
         num_buckets=NB,
         write_mode="mor",
-        mor_compact_threshold=6,
     )
     src = ParquetWalSource(spark, sp, log_dir, num_buckets=NB)
     r = PartialIngestRunner(spark, cfg, src)
     r.start()
     wal = generate_change_log(spec, out_dir=log_dir)
+    compactions = 0
     for seg in src.wal_segment_paths():
-        r.tail_batch(src.wal_batch([seg]))
-
-    # auto-compaction kept delta count under the threshold
-    assert r.table.delta_stats()["delta_files"] < 6 + NB
+        compactions += "compaction" in r.tail_batch(src.wal_batch([seg]))
+        # auto-compaction keeps every bucket under the per-bucket bound
+        deltas = _bucket_deltas(r.table)
+        assert max(deltas.values(), default=0) < lake.COMPACT_MAX_DELTAS, deltas
+    assert compactions > 0
 
     snap = snapshot_read_events(state, spec.start_lsn, spec)
     expected = oracle_apply([snap] + wal)
@@ -161,7 +168,7 @@ def test_duplicate_delivery_tie_fallback(spark, tmp_warehouse):
         assert_state_matches(spark, table, expected)
 
 
-def test_mor_read_plan_has_no_sort_aggregate(spark, tmp_warehouse):
+def test_mor_read_plan_has_no_sort_aggregate(spark, tmp_warehouse, monkeypatch):
     """VERDICT r1 'What's wrong' 3: the delta-resolving read must not
     re-introduce the SortAggregate the write path paid to remove —
     stored rows are tie-free by construction (see _resolve_mor proof),
@@ -172,12 +179,12 @@ def test_mor_read_plan_has_no_sort_aggregate(spark, tmp_warehouse):
     write_state(state_path, state)
     log_dir = os.path.join(tmp_warehouse, "source", "wal")
     os.makedirs(log_dir)
+    monkeypatch.setattr(lake, "COMPACT_MAX_DELTAS", 10**9)  # keep deltas live
     cfg = PipelineConfig(
         pipeline_id="p1",
         warehouse=os.path.join(tmp_warehouse, "wh"),
         num_buckets=4,
         write_mode="mor",
-        mor_compact_threshold=10**9,  # never compact: keep deltas live
     )
     src = ParquetWalSource(spark, state_path, log_dir, num_buckets=4)
     runner = PartialIngestRunner(spark, cfg, src)
@@ -190,3 +197,42 @@ def test_mor_read_plan_has_no_sort_aggregate(spark, tmp_warehouse):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan, plan
     assert "sort" not in plan.lower().replace("sortmergejoin", ""), plan
+
+
+def test_mor_runner_compacts_a_bucket_at_its_fifth_delta(spark, tmp_warehouse):
+    """The default rule is per bucket, not per table: on a 32-bucket
+    table where every apply touches every bucket, the snapshot and
+    three tail epochs leave four deltas per bucket (128 delta files)
+    without compacting, and the fourth tail epoch, the fifth delta on
+    each bucket, folds them all. Reads match the oracle throughout."""
+    nb = 32
+    spec = EventLogSpec(
+        n_docs=600, n_events=2400, n_segments=4, seed=41, num_buckets=nb,
+        delete_frac=0.1,
+    )
+    state = generate_initial_state(spec)
+    sp = os.path.join(tmp_warehouse, "s.parquet")
+    write_state(sp, state)
+    log_dir = os.path.join(tmp_warehouse, "wal")
+    os.makedirs(log_dir)
+    cfg = PipelineConfig(
+        pipeline_id="p1",
+        warehouse=os.path.join(tmp_warehouse, "wh"),
+        num_buckets=nb,
+        write_mode="mor",
+    )
+    src = ParquetWalSource(spark, sp, log_dir, num_buckets=nb)
+    r = PartialIngestRunner(spark, cfg, src)
+    applied = [snapshot_read_events(state, spec.start_lsn, spec)]
+    out = r.start()["snapshot"]
+    wal = generate_change_log(spec, out_dir=log_dir)
+    for i, seg in enumerate(src.wal_segment_paths()):
+        assert out["applied"] is True and "compaction" not in out
+        assert_state_matches(spark, r.table, oracle_apply(applied))
+        assert _bucket_deltas(r.table) == {b: i + 1 for b in range(nb)}
+        out = r.tail_batch(src.wal_batch([seg]))
+        applied.append(wal[i])
+    assert out["applied"] is True
+    assert out["compaction"]["applied"] is True
+    assert r.table.delta_stats()["delta_files"] == 0
+    assert_state_matches(spark, r.table, oracle_apply(applied))

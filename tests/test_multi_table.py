@@ -14,6 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from debezium_partial_snapshotter_spark.config import PipelineConfig
+from debezium_partial_snapshotter_spark.plans import lake
 from debezium_partial_snapshotter_spark.plans.lake import VersionExpiredError
 from debezium_partial_snapshotter_spark.sources.eventlog import (
     EventLogSpec,
@@ -290,18 +291,17 @@ def _expected(specs, states, t):
     )
 
 
-def test_multi_table_mor_compacts_every_tail_epoch(spark, tmp_warehouse):
+def test_multi_table_mor_compacts_every_tail_epoch(spark, tmp_warehouse, monkeypatch):
     """MoR maintenance runs on the multi-table path too: each tail epoch
-    appends up to NB delta files per table, and compaction at
-    mor_compact_threshold keeps every table below threshold + NB —
-    without it the count grows by ~NB every epoch."""
+    appends at most one delta file per touched bucket, and compaction
+    once a bucket holds COMPACT_MAX_DELTAS keeps every bucket of every
+    table below it — without it the count grows by one every epoch."""
+    monkeypatch.setattr(lake, "COMPACT_MAX_DELTAS", 2)
     n_seg = 7
     specs, states, sources, write_shared_wal = _env(
         spark, tmp_warehouse, n_segments=n_seg
     )
-    runner, _ = _runner(
-        spark, tmp_warehouse, sources, write_mode="mor", mor_compact_threshold=6
-    )
+    runner, _ = _runner(spark, tmp_warehouse, sources, write_mode="mor")
     assert runner.start()["snapshot"]["applied"]
     compactions = 0
     for i in range(n_seg):
@@ -310,7 +310,9 @@ def test_multi_table_mor_compacts_every_tail_epoch(spark, tmp_warehouse):
         for t in TABLES:
             assert out[t]["applied"], out[t]
             compactions += "compaction" in out[t]
-            assert runner.tables[t].delta_stats()["delta_files"] < 6 + NB
+            deltas = runner.tables[t].manifest().get("deltas", {})
+            bound = lake.COMPACT_MAX_DELTAS
+            assert all(len(v) < bound for v in deltas.values()), deltas
     assert compactions > 0
     for t in TABLES:
         assert_state_matches(spark, runner.tables[t], _expected(specs, states, t))

@@ -84,6 +84,7 @@ def test_contract_surface(sink):
         assert hasattr(sink, name), f"sink missing contract member {name}"
     assert sink.num_buckets == NB
     assert sink.bucket_key == "doc_id"
+    assert sink.delta_stats()["compaction_due"] is False
     assert {f.name for f in sink.schema().fields} >= {
         "doc_id", "tokens", "n_tok", "source", "_lsn", "_op_rank",
     }
