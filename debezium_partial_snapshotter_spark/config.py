@@ -92,7 +92,3 @@ class PipelineConfig:
     @property
     def tracker_path(self) -> str:
         return self.tracker_path_override or f"{self.warehouse}/{self.tracker_table}"
-
-    @property
-    def commit_log_path(self) -> str:
-        return f"{self.warehouse}/_commit_log/{self.target_table}"

@@ -29,14 +29,17 @@ it broadcasts in any join against the data plane.
 from __future__ import annotations
 
 import os
-import time
-import uuid
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from debezium_partial_snapshotter_spark.plans.lake import CommitConflict, _atomic_create
+from debezium_partial_snapshotter_spark.plans.lake import (
+    KEEP_VERSIONS,
+    CommitConflict,
+    VersionLog,
+    _retry_conflicts,
+)
 
 ARROW_SCHEMA = pa.schema(
     [
@@ -56,14 +59,9 @@ _TRIES = 8
 
 
 class SnapshotTracker:
-    #: versions retained after a committed transition; older ones are
-    #: unlinked, so the directory (listed on every current_version())
-    #: stays bounded instead of growing one file per transition
-    #: forever — the same policy as ChangefeedReader.KEEP_SEQS.
-    KEEP_VERSIONS = 8
-
     def __init__(self, path: str):
         self.path = path
+        self._log = VersionLog(path, "v", ".parquet")
 
     # ------------------------------------------------------------ storage
     @classmethod
@@ -83,48 +81,29 @@ class SnapshotTracker:
         return t
 
     def exists(self) -> bool:
-        return os.path.isdir(self.path) and bool(self._versions())
-
-    def _versions(self) -> list[int]:
-        out = []
-        for f in os.listdir(self.path) if os.path.isdir(self.path) else []:
-            if f.startswith("v") and f.endswith(".parquet"):
-                out.append(int(f[1:-8]))
-        return sorted(out)
+        return bool(self._log.versions())
 
     def current_version(self) -> int:
-        vs = self._versions()
+        vs = self._log.versions()
         if not vs:
             raise FileNotFoundError(f"tracker missing at {self.path}")
         return vs[-1]
 
     def load(self, version: int | None = None) -> pd.DataFrame:
         v = self.current_version() if version is None else version
-        return pq.read_table(os.path.join(self.path, f"v{v:08d}.parquet")).to_pandas()
+        return pq.read_table(self._log.path(v)).to_pandas()
 
     def _write_version(self, df: pd.DataFrame, version: int) -> None:
-        tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(
-            pa.Table.from_pandas(df[_COLS], schema=ARROW_SCHEMA, preserve_index=False),
-            tmp,
+        table = pa.Table.from_pandas(
+            df[_COLS], schema=ARROW_SCHEMA, preserve_index=False
         )
-        final = os.path.join(self.path, f"v{version:08d}.parquet")
-        if not _atomic_create(tmp, final):
+        if not self._log.create(version, lambda tmp: pq.write_table(table, tmp)):
             raise CommitConflict(f"tracker version {version} exists")
-
-    def _gc_versions(self) -> None:
-        """Best-effort unlink of all but the newest KEEP_VERSIONS
-        versions. Runs only after a committed transition, so the
-        version current_version() reads is always retained."""
-        for v in self._versions()[: -self.KEEP_VERSIONS]:
-            try:
-                os.unlink(os.path.join(self.path, f"v{v:08d}.parquet"))
-            except OSError:
-                pass
 
     def _transact(self, fn):
         """BEGIN .. COMMIT analog (PostgresJdbcFilterHandler.java:73-137):
-        optimistic read-modify-write with CAS retry."""
+        optimistic read-modify-write with CAS retry. A committed
+        transition prunes the log to the newest ``KEEP_VERSIONS``."""
         for attempt in range(_TRIES):
             v = self.current_version()
             df = self.load(v)
@@ -134,11 +113,9 @@ class SnapshotTracker:
             try:
                 self._write_version(new_df, v + 1)
             except CommitConflict:
-                if attempt == _TRIES - 1:
-                    raise
-                time.sleep(0.02 * (attempt + 1))
+                _retry_conflicts(attempt, _TRIES)
             else:
-                self._gc_versions()
+                self._log.prune(KEEP_VERSIONS)
                 return result
 
     # --------------------------------------------------------- operations

@@ -77,19 +77,18 @@ def latest_events_stateful(
     State stays 8 bytes per (key, salt): total state = n_salt x keys,
     still payload-width-free. STATE LIFETIME: entries live for the
     query's lifetime (NoTimeout) — at 10^10 keys that is ~80 GB of
-    state store, so bound it by ACTIVE keys in production with
-    :func:`streaming.tws.latest_events_tws` (round 6): the same filter
-    on ``transformWithStateInPandas`` with store-level TTL, runtime-
-    gated here only by the missing ``google.protobuf`` wire dependency
-    (see tws.py's module docstring). A GroupStateTimeout-based TTL was built and
-    REJECTED in round 5: ``ProcessingTimeTimeout`` makes the
+    state store. Bounding it by ACTIVE keys needs store-level TTL
+    (``transformWithStateInPandas``), whose executor wire protocol
+    imports ``google.protobuf``, absent from this runtime. A
+    GroupStateTimeout-based TTL was built and REJECTED in round 5: ``ProcessingTimeTimeout`` makes the
     availableNow MultiBatchExecutor spin timeout-check batches
     endlessly and deadlocks ``processAllAvailable`` (py4j callback
     eventually dies) on this Spark version — the eviction belongs in
     the state store, not the timeout channel. Evicting a key re-opens
     its suppression window (a later stale redelivery re-emits), which
     stays harmless downstream: the sink apply's (_lsn, _op_rank) merge
-    and commit keys make re-applies idempotent at the lake."""
+    and commit keys make re-applies idempotent at the lake (pinned by
+    tests/test_stateful.py::test_evicted_state_reopen_is_harmless_downstream)."""
     out_schema = events.schema
     cols = list(out_schema.fieldNames())
 

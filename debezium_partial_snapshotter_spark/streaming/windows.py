@@ -19,9 +19,11 @@ is the same single partial-agg shuffle as the batch twin.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from debezium_partial_snapshotter_spark.operators.windows import _epoch
+from debezium_partial_snapshotter_spark.operators.windows import (
+    session_rollup,
+    tumbling_rollup,
+)
 
 
 def windowed_rollup_stream(
@@ -33,23 +35,11 @@ def windowed_rollup_stream(
     agg_col: str = "value",
 ) -> DataFrame:
     """Tumbling-window count/sum with a late-data watermark, for
-    ``writeStream`` in append mode. Column contract matches
-    ``operators.windows.tumbling_rollup`` so the batch and streaming
-    paths are interchangeable downstream."""
-    w = F.window(F.col(ts_col), window)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(w.alias("w"), *keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(agg_col).alias("sum_value"),
-        )
-        .select(
-            _epoch(F.col("w.start")).alias("window_start"),
-            *keys,
-            "n_events",
-            "sum_value",
-        )
+    ``writeStream`` in append mode: ``operators.windows.tumbling_rollup``
+    over the watermarked stream, so the batch and streaming paths are
+    interchangeable downstream."""
+    return tumbling_rollup(
+        events.withWatermark(ts_col, watermark), ts_col, keys, window, agg_col
     )
 
 
@@ -62,35 +52,25 @@ def session_rollup_stream(
     agg_col: str = "value",
     exact_sum: bool = False,
 ) -> DataFrame:
-    """Streaming twin of ``operators.windows.session_rollup``:
-    watermarked ``session_window`` aggregation for ``writeStream`` in
-    append mode. A session is emitted exactly once, when the watermark
-    passes its end (last event + gap); rows later than the watermark
-    are dropped before the shuffle; a late row within the watermark
-    still extends/merges its open session (session_window state merge).
+    """Streaming twin of ``operators.windows.session_rollup``: its
+    native ``session_window`` aggregation over the watermarked stream,
+    for ``writeStream`` in append mode. A session is emitted exactly
+    once, when the watermark passes its end (last event + gap); rows
+    later than the watermark are dropped before the shuffle; a late row
+    within the watermark still extends/merges its open session
+    (session_window state merge).
 
     State is one (start, end, count, sum) entry per OPEN session per
     key — bounded by concurrently-active keys, not traffic. Same skew
     caveat as the batch twin (merge shuffles by key alone); for a
     hot-key corpus run the batch chunked plan over closed windows
-    instead. Column contract matches the batch twin, so the two paths
-    are interchangeable downstream; ``exact_sum`` mirrors the batch
-    twin's order-independent DECIMAL(38,9) sum (same domain caveat)."""
-    sw = F.session_window(F.col(ts_col), gap)
-    sum_in = F.col(agg_col).cast("decimal(38,9)") if exact_sum else F.col(agg_col)
-    sum_expr = F.sum(sum_in).cast("double") if exact_sum else F.sum(sum_in)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(sw.alias("w"), key)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            sum_expr.alias("sum_value"),
-        )
-        .select(
-            key,
-            _epoch(F.col("w.start")).alias("session_start"),
-            _epoch(F.col("w.end")).alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
+    instead. ``exact_sum`` is the batch twin's order-independent
+    DECIMAL(38,9) sum (same domain caveat)."""
+    return session_rollup(
+        events.withWatermark(ts_col, watermark),
+        ts_col,
+        key,
+        gap,
+        agg_col,
+        exact_sum=exact_sum,
     )

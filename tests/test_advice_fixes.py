@@ -159,7 +159,10 @@ def test_crash_between_manifest_and_commit_log_resumes(spark, tmp_warehouse):
 
     # simulate the crash window: the manifest carries the commit keys,
     # but the commit-log append never happened
-    shutil.rmtree(cfg.commit_log_path, ignore_errors=True)
+    shutil.rmtree(
+        os.path.join(cfg.warehouse, "_commit_log", cfg.target_table),
+        ignore_errors=True,
+    )
 
     # restart: a naive resume (commit log only) would reuse the stale
     # epoch key, see duplicate_commit_key forever, and never apply the

@@ -693,7 +693,7 @@ def test_cursor_seq_chain_is_garbage_collected(spark, tmp_warehouse):
     for _ in range(50):  # empty-range commits advance the seq chain
         r.commit(r.poll(spark, to_version=vs[0] + 0))
     files = [f for f in os.listdir(cdir) if f.endswith(".json")]
-    assert len(files) <= ChangefeedReader.KEEP_SEQS
+    assert len(files) <= lake.KEEP_VERSIONS
     # the retained window still serves reads and concurrent detection
     assert r.cursor() == vs[0]
     b = r.poll(spark)
@@ -715,7 +715,7 @@ def test_far_behind_cursor_skips_manifest_walk(spark, tmp_warehouse):
     def no_walk(*a, **k):
         raise AssertionError("eligibility probe walked the chain")
 
-    r._chain = no_walk  # the cap must skip the probe outright
+    r._delta_plan = no_walk  # the cap must skip the probe outright
     # the error names the cap and the epoch count, not a non-delta commit
     n = vs[-1] - vs[0]
     with pytest.raises(
@@ -749,7 +749,7 @@ def test_commit_bootstrap_refuses_rewind(spark, tmp_warehouse):
     r.start(from_version=vs[1])
     boot = r.bootstrap(spark)
     # a concurrent consumer advances the cursor past the boot target
-    r._write_seq(r._seqs()[-1] + 1, boot.to_version + 5)
+    r._write_seq(r._log.versions()[-1] + 1, boot.to_version + 5)
     with pytest.raises(ConcurrentConsumerError, match="advanced"):
         r.commit_bootstrap(boot)
 

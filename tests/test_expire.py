@@ -68,7 +68,7 @@ def test_expire_reclaims_cow_history_and_gates_time_travel(
     table, expected, _d0 = _build(spark, tmp_warehouse)
     old_version = 1  # the bootstrap manifest, long superseded
     before = _du(table.path)
-    n_manifests_before = len(table._versions())
+    n_manifests_before = len(table._log.versions())
 
     out = table.expire_versions(keep_last=1, min_age_sec=0,
                                 orphan_grace_sec=0)
@@ -79,7 +79,7 @@ def test_expire_reclaims_cow_history_and_gates_time_travel(
     # new horizon manifest this run wrote)
     assert _du(table.path) <= before - out["bytes_deleted"] + 8192
     assert _du(table.path) < before
-    assert len(table._versions()) < n_manifests_before
+    assert len(table._log.versions()) < n_manifests_before
 
     # current content untouched
     assert_state_matches(spark, table, expected)
@@ -200,8 +200,8 @@ def test_expire_min_age_protects_manifest_missing_ts(spark, tmp_warehouse):
     import json
 
     table, _expected, _d0 = _build(spark, tmp_warehouse, n_segments=2)
-    n_before = len(table._versions())
-    for v in table._versions():
+    n_before = len(table._log.versions())
+    for v in table._log.versions():
         p = os.path.join(table.manifest_dir, f"v{v:08d}.json")
         with open(p) as fh:
             man = json.load(fh)
@@ -212,12 +212,12 @@ def test_expire_min_age_protects_manifest_missing_ts(spark, tmp_warehouse):
                                 orphan_grace_sec=0)
     # with every supersession clock unknown, everything is protected
     assert out["applied"] is False and out["reason"] == "nothing_to_expire"
-    assert len(table._versions()) == n_before
+    assert len(table._log.versions()) == n_before
 
 
 def test_expire_min_age_retains_recent_versions(spark, tmp_warehouse):
     table, _expected, _d0 = _build(spark, tmp_warehouse, n_segments=2)
-    n_before = len(table._versions())
+    n_before = len(table._log.versions())
     out = table.expire_versions(keep_last=1, min_age_sec=1e6,
                                 orphan_grace_sec=0)
     # every version was superseded less than min_age ago: nothing is
@@ -226,9 +226,9 @@ def test_expire_min_age_retains_recent_versions(spark, tmp_warehouse):
     # manifest churn, no directory walk (round-5 review)
     assert out["applied"] is False and out["reason"] == "nothing_to_expire"
     assert out["expired_manifests"] == 0 and out["files_deleted"] == 0
-    assert len(table._versions()) == n_before
+    assert len(table._log.versions()) == n_before
     # every manifest-referenced file is untouched, every version readable
-    for v in table._versions():
+    for v in table._log.versions():
         m = table.manifest(v)
         for kind in ("buckets", "deltas"):
             for files in m.get(kind, {}).values():
@@ -304,7 +304,7 @@ def test_runner_integrated_expiration_bounds_storage(spark, tmp_warehouse):
     assert expired_any
     table = runner.table
     # manifests bounded: keep_last + the horizon commits between sweeps
-    assert len(table._versions()) <= cfg.expire_keep_last + 2 * cfg.expire_every_applies
+    assert len(table._log.versions()) <= cfg.expire_keep_last + 2 * cfg.expire_every_applies
     # correctness survives the reclamation
     snap = snapshot_read_events(state, spec.start_lsn, spec)
     assert_state_matches(spark, table, oracle_apply([snap] + wal))
@@ -328,7 +328,7 @@ def test_expire_min_age_clock_starts_at_supersession(spark, tmp_warehouse):
     successor lands; conversely an old version superseded long ago is
     reclaimable even if some successor is recent."""
     table, expected, _d0 = _build(spark, tmp_warehouse, n_segments=3)
-    versions = table._versions()
+    versions = table._log.versions()
     now = time.time()
     # all commits look ancient...
     for v in versions:
@@ -339,7 +339,7 @@ def test_expire_min_age_clock_starts_at_supersession(spark, tmp_warehouse):
 
     out = table.expire_versions(keep_last=1, min_age_sec=3600,
                                 orphan_grace_sec=0)
-    kept = table._versions()
+    kept = table._log.versions()
     # versions[-2] survived (superseded < min_age ago, a reader may
     # still be pinned to it); everything older was reclaimed
     assert versions[-2] in kept
@@ -355,7 +355,7 @@ def test_expire_noop_skips_cas_and_walk_unless_sweeping(
     sweep_orphans=True forces the orphan pass without a horizon CAS."""
     table, expected, _d0 = _build(spark, tmp_warehouse, n_segments=2)
     table.expire_versions(keep_last=1, min_age_sec=0, orphan_grace_sec=0)
-    n = len(table._versions())
+    n = len(table._log.versions())
 
     # plant an aged orphan from a crashed commit
     d = os.path.join(table.data_dir, "c-0ddba11", "_bucket=0")
@@ -370,7 +370,7 @@ def test_expire_noop_skips_cas_and_walk_unless_sweeping(
     out = table.expire_versions(keep_last=50, min_age_sec=0,
                                 orphan_grace_sec=0)
     assert out["applied"] is False and out["reason"] == "nothing_to_expire"
-    assert len(table._versions()) == n
+    assert len(table._log.versions()) == n
     assert os.path.exists(orphan)
 
     # forced orphan sweep: still no CAS (no horizon change), but the
@@ -378,7 +378,7 @@ def test_expire_noop_skips_cas_and_walk_unless_sweeping(
     out = table.expire_versions(keep_last=50, min_age_sec=0,
                                 orphan_grace_sec=0, sweep_orphans=True)
     assert out["applied"] is True and out["expired_manifests"] == 0
-    assert len(table._versions()) == n
+    assert len(table._log.versions()) == n
     assert not os.path.exists(orphan)
     assert_state_matches(spark, table, expected)
 

@@ -186,3 +186,84 @@ def test_stateful_salted_validation(spark, tmp_warehouse):
 
     with pytest.raises(ValueError, match="_salt"):
         latest_events_stateful(df.withColumn("_salt", F.lit(7)), n_salt=4)
+
+
+def test_evicted_state_reopen_is_harmless_downstream(spark, tmp_warehouse):
+    """EXECUTES the idempotent-sink argument the TTL story rests on
+    (the latest_events_stateful docstring), previously only asserted:
+    after total state loss (a fresh checkpoint — strictly worse than
+    any TTL eviction), a full redelivery re-emits stale winners —
+    including EQUAL-ordinal copies of rows already applied — and
+    pushing those re-emissions through the REAL sink merge
+    (operators/upsert.apply_batch, CoW) leaves the applied table
+    byte-identical to the oracle, one row per key, no duplicate from
+    the self-tie (the pre-commit tie validation + guarded retry)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from debezium_partial_snapshotter_spark.operators.upsert import (
+        apply_batch,
+        empty_table_for,
+    )
+
+    payload = StructType(
+        [
+            StructField("doc_id", StringType(), False),
+            StructField("value", DoubleType(), True),
+        ]
+    )
+
+    def to_envelope(emissions):
+        flat = spark.createDataFrame(
+            [(d, lsn, op, v) for d, lsn, op, v in emissions], FLAT
+        )
+        return flat.select(
+            "op",
+            "doc_id",
+            "lsn",
+            F.when(F.col("op") == "d", F.lit(None).cast(payload))
+            .otherwise(F.struct("doc_id", "value"))
+            .alias("after"),
+        )
+
+    table = empty_table_for(
+        os.path.join(tmp_warehouse, "t"), payload, num_buckets=4
+    )
+    batch1 = [
+        ("a", 10, "u", 1.0), ("a", 12, "u", 2.0),
+        ("b", 11, "c", 5.0), ("c", 14, "d", 0.0), ("c", 9, "u", 3.0),
+    ]
+    feed1 = os.path.join(tmp_warehouse, "feed1")
+    os.makedirs(feed1)
+    out1 = []
+    _write(batch1, os.path.join(feed1, "b1.parquet"))
+    _run_stream(spark, feed1, os.path.join(tmp_warehouse, "ck1"), out1)
+    assert apply_batch(table, to_envelope(out1), commit_key="s:1")["applied"]
+
+    # worst-case eviction: state store gone entirely (fresh checkpoint
+    # + fresh source dir). Redeliver EVERYTHING plus one real advance.
+    batch2 = batch1 + [("b", 20, "u", 7.0)]
+    feed2 = os.path.join(tmp_warehouse, "feed2")
+    os.makedirs(feed2)
+    out2 = []
+    _write(batch2, os.path.join(feed2, "b1.parquet"))
+    _run_stream(spark, feed2, os.path.join(tmp_warehouse, "ck2"), out2)
+    # the suppression window genuinely re-opened: stale/equal-ordinal
+    # winners re-emitted alongside the genuine advance
+    assert ("a", 12, "u", 2.0) in out2  # equal-ord copy of an applied row
+    assert ("b", 20, "u", 7.0) in out2
+
+    st = apply_batch(table, to_envelope(out2), commit_key="s:2")
+    assert st["applied"]
+
+    rows = table.read(spark).collect()
+    got = {r["doc_id"]: (r["value"], r["_lsn"]) for r in rows}
+    # oracle: winner per key over ALL unique events; c's winner is the
+    # delete -> absent
+    assert got == {"a": (2.0, 12), "b": (7.0, 20)}
+    assert len(rows) == len(got)  # no duplicate row from the self-tie

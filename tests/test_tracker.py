@@ -280,7 +280,7 @@ def test_tracker_version_history_is_garbage_collected(tmp_path):
         assert tr.set_needs([p], "p1", needs=needs) == 1
         expected[p] = needs
     versions = [f for f in os.listdir(tr.path) if f.startswith("v")]
-    assert len(versions) <= 8  # SnapshotTracker.KEEP_VERSIONS
+    assert len(versions) <= 8  # lake.KEEP_VERSIONS
     assert tr.current_version() == 52  # create + claim + 50 transitions
     st = tr.state("p1")
     assert dict(zip(st["table_partition"], st["needs_snapshot"])) == expected
