@@ -59,7 +59,7 @@ def resolve_winners(
 ) -> DataFrame:
     """One row per key: the candidate with the maximal ``(_lsn,
     _op_rank)`` — the one conflict-resolution kernel (upsert apply, MoR
-    read, changefeed poll, feed apply). A snapshot read (rank 0) loses
+    read, changefeed poll). A snapshot read (rank 0) loses
     to any WAL event at the same lsn.
 
     The order is ONE BIGINT ``_lsn*4 + _op_rank`` (rank < 4): a

@@ -250,7 +250,6 @@ def _merge_and_commit(
 
     # ---- 5. atomic commit (data + schema + commit key + watermark)
     commit_kwargs = dict(
-        affected_buckets=affected,
         commit_key=commit_key,
         new_schema=with_system(merged) if evolved else None,
         validate=validate,
@@ -279,7 +278,8 @@ def _merge_and_commit(
             .observe(obs, F.count(F.lit(1)).alias("rows_live"))
         )
         applied = table.replace_buckets(
-            new_content, read_version=read_version, **commit_kwargs
+            new_content, affected_buckets=affected, read_version=read_version,
+            **commit_kwargs,
         )
 
     if applied == "invalid":

@@ -188,8 +188,9 @@ class ChangefeedReader:
         manifests (the table's parent-chain walk): no file listing, no
         data IO. VersionExpiredError propagates when the chain crosses
         the horizon."""
-        chain = self.table._chain(from_v, to_v)
-        parent = self.table.manifest(from_v)
+        chain, parent = self.table._chain(from_v, to_v)
+        if parent is None:  # from_v predates the table: raise as a read
+            parent = self.table.manifest(from_v)
         new_files: list[str] = []
         for man in chain:
             if man.get("op") == "compact":
@@ -441,12 +442,20 @@ def apply_feed(
     column (round 6; pinned by
     tests/test_changefeed_reader.py::test_mirror_propagates_schema_evolution).
 
-    The feed rows are already per-key winners carrying ``(_lsn,
-    _op_rank)``, so this is the tail of ``apply_batch``: (re-resolve per
-    key — a no-op for a single poll, safety for unions of polls), route
-    by the downstream bucket function, append as MoR deltas. The
-    downstream reader's resolve handles cross-batch ordering exactly
-    like the upstream's.
+    The feed rows carry ``(_lsn, _op_rank)``, so this is the tail of
+    ``apply_batch``: cast to the merged schema, route by the downstream
+    bucket function, append as MoR deltas in ONE write job. There is no
+    resolve and no bucket pre-collect: the downstream is merge-on-read,
+    so its reader (and its compaction) resolves winners across every
+    applied batch exactly like the upstream's, and the delta commit
+    names the buckets its files landed in. The contract: feed rows are
+    tie-free per ``(key, _lsn, _op_rank)``. Every
+    :class:`ChangefeedBatch` meets it — the fast path resolves per key,
+    the net fallback is one row per key with deletes re-ordinaled, and
+    a union of distinct polls holds distinct commits' rows. (A resolve
+    here would drop only rows the downstream read drops anyway, and it
+    would keep exact ties, since ``resolve_winners`` keeps duplicates.)
+    An empty feed commits nothing and returns False.
 
     .. warning:: Feed a DELTA-mode batch here, never raw
        ``mode='net'`` output: a net delete row carries the PRE-image's
@@ -457,10 +466,12 @@ def apply_feed(
 
     ``expected_version`` makes the append strict: a downstream commit
     landing since that version raises ``CommitConflict``."""
-    key = table.bucket_key
-    _, bexpr, layout = table.bucket_plan(F.col(key))
+    _, bexpr, layout = table.bucket_plan(F.col(table.bucket_key))
     sch, evolved = _evolved_schema(table, feed)
-    winners = feed.select(
+    # the key is cast with the payload BEFORE bucketing: bucketing
+    # hashes the key's string rendering, so a widening cast (an int
+    # feed into a double-keyed table) changes its bucket
+    rows = feed.select(
         *[
             F.col(f.name).cast(f.dataType).alias(f.name)
             if f.name in feed.columns
@@ -469,32 +480,8 @@ def apply_feed(
         ],
         (F.col("_change_type") == "delete").alias("_is_delete"),
     )
-    winners = resolve_winners(winners, key).withColumn("_bucket", bexpr)
-    # Affected buckets come from a NARROW pass over the feed key, not
-    # from `winners`: the resolve keeps >= 1 row per key, so the
-    # winners' bucket set IS the feed keys' bucket set — and collecting
-    # it from `winners` would execute the whole groupBy + join plan a
-    # second time on top of append_deltas' write (round-6 review
-    # finding 7). The key is CAST to the merged-schema type FIRST,
-    # exactly as the winners projection casts it: bucketing hashes the
-    # key's string rendering, so a widening cast (int feed into a
-    # double-keyed table) would otherwise put `affected` and the
-    # written files in different buckets and the manifest's `touched`
-    # list would miss buckets that actually changed (second review
-    # pass).
-    key_type = sch[key].dataType
-    affected = sorted(
-        int(r["_b"])
-        for r in feed.select(F.col(key).cast(key_type).alias(key))
-        .select(bexpr.alias("_b"))
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return False
     return table.append_deltas(
-        winners,
-        affected_buckets=affected,
+        rows.withColumn("_bucket", bexpr),
         commit_key=commit_key,
         new_schema=sch if evolved else None,
         expected_layout=layout,

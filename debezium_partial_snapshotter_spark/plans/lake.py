@@ -384,24 +384,29 @@ class LakeTable:
     def snapshot_lsn(self) -> int:
         return self.manifest().get("snapshot_lsn", -1)
 
-    def _chain(self, from_version: int, to_version: int) -> list[dict]:
+    def _chain(
+        self, from_version: int, to_version: int
+    ) -> tuple[list[dict], dict | None]:
         """Manifests of (from_version, to_version], ascending, walked
         down the parent chain — the ONE chain traversal behind the
         concurrent-writer conflict check, the change feed and the
-        changefeed reader's delta plan. Propagates
-        FileNotFoundError/VersionExpiredError when the chain crosses
-        the expiration horizon — each caller owns its policy for
-        that."""
+        changefeed reader's delta plan — plus the manifest the walk
+        stopped on (``from_version``'s own; None when the chain reached
+        the table's first version first), so no caller reads it twice.
+        Propagates FileNotFoundError/VersionExpiredError when the chain
+        crosses the expiration horizon — each caller owns its policy
+        for that."""
         out: list[dict] = []
         cur = self.manifest(to_version)
         while cur["version"] > from_version:
             out.append(cur)
             parent = cur.get("parent")
             if parent is None:
+                cur = None
                 break
             cur = self.manifest(parent)
         out.reverse()
-        return out
+        return out, cur
 
     def _touched_between(
         self, from_version: int, to_version: int
@@ -410,7 +415,7 @@ class LakeTable:
         None when any manifest in the range predates the ``touched``
         field (conservative: everything)."""
         touched: set[int] = set()
-        for man in self._chain(from_version, to_version):
+        for man in self._chain(from_version, to_version)[0]:
             t = man.get("touched")
             if t is None:
                 return None
@@ -630,7 +635,7 @@ class LakeTable:
                 _retry_conflicts(attempt, _CAS_TRIES)
 
     def _write_partitioned(
-        self, df: DataFrame, commit_dir: str, affected_buckets: list[int]
+        self, df: DataFrame, commit_dir: str, buckets: list[int] | None
     ) -> dict[str, list[str]]:
         """Write df (carrying int ``_bucket``) under ``commit_dir``, one
         file per bucket: one shuffle on _bucket co-locates each bucket's
@@ -638,17 +643,21 @@ class LakeTable:
         tasks, and ``partitionBy`` splits each task's output into one
         file per bucket it holds. A task per bucket instead (32 tasks on
         4 cores for a 32-bucket commit) cost 0.3-0.4 s more per write
-        at 1,000-8,000 rows (4 vCPU); returns bucket -> relative file
-        list."""
+        at 1,000-8,000 rows (4 vCPU). Returns bucket -> relative file
+        list: exactly the buckets the write produced, plus an empty
+        entry for every other bucket in ``buckets`` (a replacement's
+        list, which also caps the write width; a delta append passes
+        None and writes at the full shuffle width)."""
         slots = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        width = slots if buckets is None else max(1, min(len(buckets), slots))
         (
-            df.repartition(max(1, min(len(affected_buckets), slots)), "_bucket")
+            df.repartition(width, "_bucket")
             .write.partitionBy("_bucket")
             .option("maxRecordsPerFile", 0)
             .mode("overwrite")
             .parquet(commit_dir)
         )
-        new_files: dict[str, list[str]] = {str(b): [] for b in affected_buckets}
+        new_files: dict[str, list[str]] = {str(b): [] for b in buckets or []}
         for entry in os.listdir(commit_dir):
             if not entry.startswith("_bucket="):
                 continue
@@ -667,7 +676,7 @@ class LakeTable:
         self,
         kind: str,
         df: DataFrame,
-        affected_buckets: list[int],
+        affected_buckets: list[int] | None,
         *,
         commit_key: str | None = None,
         new_schema: StructType | None = None,
@@ -686,13 +695,15 @@ class LakeTable:
         they are appended to each bucket's MoR deltas). Writes the files
         under a fresh commit dir, validates them, then ``_transact``s
         the manifest under the guards. Every exit that commits no
-        manifest — duplicate key, failed or raising validation, guard
-        conflict, exhausted CAS, failed write — removes the commit dir,
-        so only a crash can leave one for ``sweep_orphans``."""
+        manifest — duplicate key, a delta write that produced no file,
+        failed or raising validation, guard conflict, exhausted CAS,
+        failed write — removes the commit dir, so only a crash can leave
+        one for ``sweep_orphans``. The manifest's ``touched`` list is
+        the bucket set of the written files (with a replacement's
+        emptied buckets), so it cannot disagree with the data."""
         if commit_key is not None and commit_key in self.committed_keys():
             return False
         commit_dir = os.path.join(self.data_dir, f"c-{uuid.uuid4().hex[:12]}")
-        touched = sorted(int(b) for b in affected_buckets)
 
         def change(man: dict) -> dict | None:
             layout = self._layout_of(man)
@@ -735,8 +746,7 @@ class LakeTable:
             }
             if kind == "deltas":
                 for b, files in new_files.items():
-                    if files:
-                        deltas[b] = deltas.get(b, []) + files
+                    deltas[b] = deltas.get(b, []) + files
             else:
                 base = fields["buckets"] = {**man["buckets"]}
                 for b, files in new_files.items():
@@ -761,6 +771,9 @@ class LakeTable:
         committed = False
         try:
             new_files = self._write_partitioned(df, commit_dir, affected_buckets)
+            if kind == "deltas" and not new_files:
+                return False  # nothing to append
+            touched = sorted(int(b) for b in new_files)
             # post-write / pre-commit validation window: data files exist
             # but the manifest swap has NOT happened — a failed
             # validation abandons the commit dir with zero reader-visible
@@ -773,17 +786,19 @@ class LakeTable:
             if not committed:
                 shutil.rmtree(commit_dir, ignore_errors=True)
 
-    def append_deltas(
-        self, df: DataFrame, affected_buckets: list[int], **commit
-    ) -> bool | str:
+    def append_deltas(self, df: DataFrame, **commit) -> bool | str:
         """Merge-on-read commit: append ``df`` (batch winners INCLUDING
         delete tombstones, carrying ``_bucket`` and ``_is_delete``) as
         delta files — no base rewrite. Readers resolve winners on the
         fly; ``compact()`` folds deltas back into the base. This is the
         low-write-amplification path for epochs touching a small
-        fraction of each bucket (Iceberg v2 MoR analog). Takes the same
-        keyword arguments as ``replace_buckets``."""
-        return self._commit_files("deltas", df, affected_buckets, **commit)
+        fraction of each bucket (Iceberg v2 MoR analog). The commit
+        names its own buckets: its delta entries and ``touched`` list
+        are the ``_bucket`` values the write produced, so the caller
+        collects no bucket list first. A ``df`` without rows commits
+        nothing and returns False. Takes the same keyword arguments as
+        ``replace_buckets``."""
+        return self._commit_files("deltas", df, None, **commit)
 
     def delta_stats(self) -> dict:
         deltas = self.manifest().get("deltas", {})

@@ -388,9 +388,9 @@ def _commit(spark, table, method, docs, **kw):
     """Commit one row per doc id through ``method`` into its real bucket."""
     rows = [(d, bucket_id_py(d, NB)) for d in docs]
     df = _staged(spark, rows)
-    if method == "append_deltas":
-        df = df.withColumn("_is_delete", F.lit(False))
-    return getattr(table, method)(df, sorted({b for _, b in rows}), **kw)
+    if method == "append_deltas":  # a delta commit names its own buckets
+        return table.append_deltas(df.withColumn("_is_delete", F.lit(False)), **kw)
+    return table.replace_buckets(df, sorted({b for _, b in rows}), **kw)
 
 
 def _commit_dirs(table):

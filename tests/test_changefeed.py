@@ -172,7 +172,7 @@ def test_read_changes_key_not_first_column_with_mor_deltas(
     deltas = spark.createDataFrame(
         [(None, "a", 2, 3, True), (9.5, "b", 2, 2, False)], delta_schema
     ).withColumn("_bucket", bucket_id(F.col("doc_id"), 2))
-    t.append_deltas(deltas, [0, 1])  # to-version resolves through MoR
+    t.append_deltas(deltas)  # to-version resolves through MoR
 
     ch = {
         r["doc_id"]: (r["_change_type"], r["score"], r["_lsn"])

@@ -10,11 +10,13 @@ consumers that resume from a persisted position (reference README.md:9-13,
 the resume loop in PartialSnapshotter.java)."""
 
 import os
+from collections import Counter
 from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 import pytest
 
+from debezium_partial_snapshotter_spark.functions import bucket_id_py
 from debezium_partial_snapshotter_spark.operators.upsert import (
     apply_batch,
     empty_table_for,
@@ -37,6 +39,7 @@ from debezium_partial_snapshotter_spark.sources.eventlog import (
     generate_initial_state,
     snapshot_read_events,
 )
+from tests.test_lake_write import _jobs_in_group
 from tests.test_replay import load_events
 
 NB = 4
@@ -336,6 +339,95 @@ def test_apply_feed_reproduces_upstream_exactly(spark, tmp_warehouse):
     # mean downstream (_lsn, _op_rank) need not match upstream, but the
     # SET of live keys and their payloads must
     assert {k: v[2] for k, v in up_img.items()} == down_img
+
+
+def test_apply_feed_is_one_write_naming_its_buckets(spark, tmp_warehouse):
+    """apply_feed runs the feed through one write: no bucket
+    pre-collect, and the downstream commit's ``touched`` list is
+    exactly the buckets of the feed keys, taken from the written
+    files."""
+    table, vs = _build(spark, tmp_warehouse)
+    r = ChangefeedReader(table, os.path.join(tmp_warehouse, "c"))
+    r.start(from_version=vs[1])
+    b = r.poll(spark)
+    assert b.fast_path
+    down = empty_table_for(
+        os.path.join(tmp_warehouse, "down"), TOKENS_SCHEMA, num_buckets=3
+    )
+    applied, jobs = _jobs_in_group(
+        spark, lambda: apply_feed(down, b.df, commit_key="f:1")
+    )
+    assert applied is True
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+    names = [s.name for s in stages if s is not None]
+    assert names and not [n for n in names if n.startswith("collect")], names
+    keys = {x["doc_id"] for x in b.df.select("doc_id").collect()}
+    assert down.manifest()["touched"] == sorted(
+        {bucket_id_py(k, 3) for k in keys}
+    )
+
+
+def test_empty_feed_commits_nothing(spark, tmp_warehouse):
+    """An empty feed lands no downstream version and leaves no commit
+    dir behind."""
+    table, vs = _build(spark, tmp_warehouse)
+    r = ChangefeedReader(table, os.path.join(tmp_warehouse, "c"))
+    r.start(from_version=vs[-1])
+    empty = r.poll(spark)
+    assert empty.df.count() == 0
+    down = empty_table_for(
+        os.path.join(tmp_warehouse, "down"), TOKENS_SCHEMA, num_buckets=3
+    )
+    v = down.current_version()
+    assert apply_feed(down, empty.df, commit_key="f:0") is False
+    assert down.current_version() == v
+    assert not [d for d in os.listdir(down.data_dir) if d.startswith("c-")]
+
+
+def test_union_of_polls_applies_as_one_feed(spark, tmp_warehouse):
+    """apply_feed does not re-resolve its feed: a union of two
+    consecutive delta polls, which holds two rows for every key both
+    ranges changed, applied as ONE feed still reproduces the upstream —
+    the downstream's merge-on-read resolve picks each key's winner."""
+    table, vs = _build(spark, tmp_warehouse)
+    r = ChangefeedReader(table, os.path.join(tmp_warehouse, "c"))
+    r.start(from_version=1)
+    b1 = r.poll(spark, to_version=vs[2])
+    r.commit(b1)
+    b2 = r.poll(spark)
+    assert b1.fast_path and b2.fast_path
+    both = b1.df.unionByName(b2.df)
+    assert both.count() > both.select("doc_id").distinct().count()
+    down = empty_table_for(
+        os.path.join(tmp_warehouse, "down"), TOKENS_SCHEMA, num_buckets=3
+    )
+    assert apply_feed(down, both, commit_key="f:1-2") is True
+    assert _down_image(spark, down) == _upstream_image(spark, table)
+    rows = down.read(spark).collect()
+    assert len(rows) == len({x["doc_id"] for x in rows})
+
+
+def test_delta_plan_reads_each_manifest_once(
+    spark, tmp_warehouse, monkeypatch
+):
+    """The delta plan takes the range's base manifest from the chain
+    walk that stopped on it instead of reading it a second time."""
+    table, apply_seg = _mor_upstream(spark, tmp_warehouse)
+    for i in (0, 1, 2):
+        apply_seg(i)
+    assert table.current_version() == 4
+    r = ChangefeedReader(table, os.path.join(tmp_warehouse, "c"))
+    calls = Counter()
+    orig = LakeTable.manifest
+
+    def counting(self, version=None):
+        calls[version] += 1
+        return orig(self, version)
+
+    monkeypatch.setattr(LakeTable, "manifest", counting)
+    assert r._delta_plan(1, 4)
+    assert dict(calls) == {4: 1, 3: 1, 2: 1, 1: 1}
 
 
 def test_bootstrap_after_horizon_expiration(spark, tmp_warehouse):
@@ -760,7 +852,8 @@ def _plan(df) -> str:
 
 def test_winner_merges_are_sort_free(spark, tmp_warehouse):
     """The apply merge, the MoR read, the changefeed delta poll and
-    apply_feed all resolve winners with the same kernel: a primitive
+    the plan apply_feed writes (the poll's, unresolved again) all
+    resolve winners with the same kernel: a primitive
     HashAggregate max plus a ShuffledHashJoin back to the wide rows —
     never a SortAggregate or a SortMergeJoin."""
     table, vs = _build(spark, tmp_warehouse, write_mode="mor")

@@ -92,8 +92,8 @@ def test_read_of_many_files_starts_no_listing_job(spark, tmp_warehouse):
     table = LakeTable.create(os.path.join(tmp_warehouse, "t"), SCHEMA, num_buckets=NB)
     buckets = list(range(NB))
     table.replace_buckets(_rows(spark, 1), buckets)
-    table.append_deltas(_rows(spark, 2, delete_every=7), buckets)
-    table.append_deltas(_rows(spark, 3, delete_every=5), buckets)
+    table.append_deltas(_rows(spark, 2, delete_every=7))
+    table.append_deltas(_rows(spark, 3, delete_every=5))
     man = table.manifest()
     few = buckets[:10]
     n_few = len(table._files(man, few, "buckets") + table._files(man, few, "deltas"))
