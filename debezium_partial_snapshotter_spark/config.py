@@ -66,7 +66,6 @@ class PipelineConfig:
 
     # streaming
     checkpoint_dir: str = field(default="")
-    max_files_per_trigger: int = 8
 
     # explicit tracker location — lets several pipelines share ONE tracker
     # table (reference: compound PK (table_name, server_name) on a single
@@ -82,12 +81,17 @@ class PipelineConfig:
     partition_exclude: str = ""  # regex; empty = exclude none
 
     def __post_init__(self) -> None:
+        if self.write_mode not in ("cow", "mor"):
+            raise ValueError(
+                f"write_mode must be 'cow' or 'mor', got {self.write_mode!r}"
+            )
+        if self.on_tracker_error not in ("skip", "snapshot", "fail"):
+            raise ValueError(
+                "on_tracker_error must be 'skip', 'snapshot' or 'fail', "
+                f"got {self.on_tracker_error!r}"
+            )
         if not self.checkpoint_dir:
             self.checkpoint_dir = f"{self.warehouse}/_checkpoints/{self.pipeline_id}"
-
-    @property
-    def target_path(self) -> str:
-        return f"{self.warehouse}/{self.target_table}"
 
     @property
     def tracker_path(self) -> str:

@@ -3,13 +3,11 @@
 The Spark-side plumbing is real and tested — binary payload column,
 typed metadata struct, Arrow-batched ``mapInPandas`` with explicit
 output schema, deterministic partitioning — while the actual codec step
-is stubbed (the decode libraries are not in this container):
-
-- ``decode_image`` raises ``NotImplementedError`` unless PIL is
-  importable (clearly-marked stub, per the build brief);
-- ``fake_decode_meta`` derives deterministic pseudo-metadata from the
-  payload bytes, so the pipeline shape (schemas, batch iteration,
-  explode of frame samples) is exercised end-to-end and oracle-checkable.
+is a stand-in: ``fake_decode_meta`` derives deterministic
+pseudo-metadata from the payload bytes, so the pipeline shape (schemas,
+batch iteration, explode of frame samples) is exercised end-to-end and
+oracle-checkable. A real decoder (Pillow, librosa) replaces its body on
+a cluster that ships one.
 """
 
 from __future__ import annotations
@@ -20,21 +18,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-    ]
 )
 
 META_SCHEMA = StructType(
@@ -92,19 +80,6 @@ def fake_decode_meta(media: DataFrame) -> DataFrame:
     # import and inherits parallelism from real-scale scan splits.
     src = media.select("media_id", "kind", "payload")
     return src.mapInPandas(decode, schema=META_SCHEMA)
-
-
-def decode_image(media: DataFrame) -> DataFrame:
-    """REAL decode path — STUB. Requires PIL, which this container does
-    not ship; the import gate keeps the engine importable everywhere."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "image decode requires Pillow; this environment stubs it — "
-            "use fake_decode_meta for plumbing tests"
-        ) from e
-    raise NotImplementedError("real decoder wiring lands with the codec image")
 
 
 def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:

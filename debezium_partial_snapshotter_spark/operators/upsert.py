@@ -50,6 +50,9 @@ from debezium_partial_snapshotter_spark.plans.lake import CommitConflict, LakeTa
 #: means epochs are paying a full re-merge).
 OBSERVATION_FALLBACKS = 0
 
+#: CommitConflict re-merges ``apply_batch`` runs before it re-raises.
+MERGE_RETRIES = 3
+
 SYSTEM_FIELDS = [
     StructField("_lsn", LongType(), False),
     StructField("_op_rank", IntegerType(), False),
@@ -77,9 +80,7 @@ def apply_batch(
     commit_key: str | None = None,
     salt_buckets: int = 0,
     write_mode: str = "cow",
-    tie_guard: bool = False,
     watermark_kind: str = "wal",
-    _merge_retries: int = 3,
 ) -> dict:
     """Apply one micro-batch / epoch of change events. Idempotent under
     re-delivery of the same commit_key (returns ``applied=False``).
@@ -104,10 +105,16 @@ def apply_batch(
         WAL events idempotent.
 
     The stats carry ``retries`` (CommitConflict re-merges, at most
-    ``_merge_retries``) and ``tie_guard`` (whether the duplicate-delivery
-    guard ran, requested or after a detected tie).
+    ``MERGE_RETRIES``) and ``tie_guard`` (whether the duplicate-delivery
+    guard ran after a detected tie).
     """
-    retries = 0
+    if write_mode not in ("cow", "mor"):
+        raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
+    if watermark_kind not in ("wal", "snapshot"):
+        raise ValueError(
+            f"watermark_kind must be 'wal' or 'snapshot', got {watermark_kind!r}"
+        )
+    retries, tie_guard = 0, False
     while True:
         try:
             stats = _merge_and_commit(
@@ -118,7 +125,7 @@ def apply_batch(
             # a concurrent writer committed into our buckets after we
             # read them, or a rescale changed num_buckets under us: the
             # merge is stale — re-plan, re-read and re-merge.
-            if retries >= _merge_retries:
+            if retries >= MERGE_RETRIES:
                 raise
             retries += 1
             continue
@@ -217,10 +224,14 @@ def _merge_and_commit(
         # skips it and instead VALIDATES tie-freeness pre-commit (below),
         # retrying with the guard on only when a tie actually occurred.
         winners = winners.dropDuplicates(["doc_id"])
-    obs_pre = Observation()
-    winners = winners.observe(obs_pre, F.count(F.lit(1)).alias("n_rows"))
-
+    # ONE observation of the winners feeds both the tie check and
+    # rows_live: a CoW write drops the tombstones after this point
     obs = Observation()
+    winners = winners.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_if(F.col("_is_delete")).alias("n_deletes"),
+    )
 
     def _obs_get(o):
         """Observation metrics can be unavailable when AQE folds the
@@ -239,9 +250,9 @@ def _merge_and_commit(
         # key count; checked AFTER the data files land but BEFORE the
         # manifest swap — a detected tie abandons the commit dir.
         def validate():
-            pre, keys = _obs_get(obs_pre), _obs_get(obs_keys)
-            if pre is not None and keys is not None:
-                return pre["n_rows"] == keys["n_keys"]
+            rows, keys = _obs_get(obs), _obs_get(obs_keys)
+            if rows is not None and keys is not None:
+                return rows["n_rows"] == keys["n_keys"]
             # metrics lost to plan folding: recount explicitly (one
             # extra job, edge case only — never the hot path)
             global OBSERVATION_FALLBACKS
@@ -266,16 +277,13 @@ def _merge_and_commit(
     )
     if write_mode == "mor":
         # keep tombstones: a delta delete must shadow older base rows
-        new_content = winners.withColumn("_bucket", bexpr).observe(
-            obs, F.count(F.lit(1)).alias("rows_live")
-        )
+        new_content = winners.withColumn("_bucket", bexpr)
         applied = table.append_deltas(new_content, **commit_kwargs)
     else:
         new_content = (
             winners.where(~F.col("_is_delete"))
             .drop("_is_delete")
             .withColumn("_bucket", bexpr)
-            .observe(obs, F.count(F.lit(1)).alias("rows_live"))
         )
         applied = table.replace_buckets(
             new_content, affected_buckets=affected, read_version=read_version,
@@ -285,7 +293,12 @@ def _merge_and_commit(
     if applied == "invalid":
         return {"applied": applied}
     wall = time.time() - t0
-    live = _obs_get(obs) if applied else None
+    obs_rows = _obs_get(obs) if applied else None
+    live = None
+    if obs_rows is not None:
+        live = obs_rows["n_rows"]
+        if write_mode == "cow":
+            live -= obs_rows["n_deletes"]
     return {
         "applied": applied,
         "affected_buckets": affected,
@@ -293,7 +306,7 @@ def _merge_and_commit(
         "batch_keys": n_events,
         "watermark_lsn": batch_watermark,
         "schema_evolved": evolved,
-        "rows_live": live.get("rows_live") if live is not None else None,
+        "rows_live": live,
         "wall_ms": int(wall * 1000),
     }
 

@@ -67,6 +67,13 @@ from debezium_partial_snapshotter_spark.plans.lake import (
     _empty_changes,
 )
 
+#: Cap on the per-epoch manifest walk in ``poll``: a consumer further
+#: behind than this goes straight to the net resolve (O(changed
+#: buckets)) instead of paying one driver-side manifest read per epoch
+#: just to discover the range is fast-path-ineligible anyway (VERDICT
+#: r6 "What's wrong 2").
+MAX_DELTA_EPOCHS = 256
+
 
 class ConcurrentConsumerError(Exception):
     """Another consumer instance sharing this cursor directory advanced
@@ -79,8 +86,8 @@ class IneligibleRangeError(Exception):
     contains a commit that is neither a pure delta append nor
     content-neutral (a copy-on-write rewrite, a bucket split, or a
     LEGACY pre-marker compaction; marked compactions are skipped —
-    see ``_delta_plan``), or it spans more epochs than the reader's
-    ``max_delta_epochs`` eligibility-walk cap. The message says which."""
+    see ``_delta_plan``), or it spans more epochs than the
+    ``MAX_DELTA_EPOCHS`` eligibility-walk cap. The message says which."""
 
 
 @dataclass
@@ -109,18 +116,9 @@ class ChangefeedReader:
     metadata is O(polls), never O(table).
     """
 
-    def __init__(
-        self, table: LakeTable, cursor_dir: str, max_delta_epochs: int = 256
-    ):
+    def __init__(self, table: LakeTable, cursor_dir: str):
         self.table = table
         self.cursor_dir = cursor_dir
-        #: cap on the per-epoch manifest walk in poll(): a consumer
-        #: that is further behind than this goes straight to the net
-        #: resolve (O(changed buckets)) instead of paying one
-        #: driver-side manifest read per epoch just to discover the
-        #: range is fast-path-ineligible anyway (VERDICT r6 "What's
-        #: wrong 2").
-        self.max_delta_epochs = max_delta_epochs
         os.makedirs(cursor_dir, exist_ok=True)
         self._log = VersionLog(cursor_dir, "c", ".json")
 
@@ -248,7 +246,11 @@ class ChangefeedReader:
         :class:`IneligibleRangeError` (for consumers that must never
         pay a resolve)."""
         if mode not in ("delta", "net"):
-            raise ValueError(f"unknown mode {mode!r}")
+            raise ValueError(f"mode must be 'delta' or 'net', got {mode!r}")
+        if on_ineligible not in ("net", "error"):
+            raise ValueError(
+                f"on_ineligible must be 'net' or 'error', got {on_ineligible!r}"
+            )
         from_v = self.cursor()
         if from_v is None:
             raise RuntimeError("cursor not initialized; call start()")
@@ -283,7 +285,7 @@ class ChangefeedReader:
                 self.table.read_changes(spark, from_v, to_v), False, n_epochs
             )
 
-        if n_epochs > self.max_delta_epochs:
+        if n_epochs > MAX_DELTA_EPOCHS:
             # far-behind cursor: don't pay one driver-side manifest
             # read per epoch probing fast-path eligibility — go
             # straight to the fallback (the net resolve is
@@ -291,7 +293,7 @@ class ChangefeedReader:
             files = None
             why = (
                 f"spans {n_epochs} epochs, more than max_delta_epochs="
-                f"{self.max_delta_epochs}"
+                f"{MAX_DELTA_EPOCHS}"
             )
         else:
             files = self._delta_plan(from_v, to_v)

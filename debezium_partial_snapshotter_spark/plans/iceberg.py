@@ -215,11 +215,6 @@ class IcebergTable:
             return str(nb)
         return f"{nb}->{tgt.split('->')[-1]}"
 
-    def bucket_expr(self, key):
-        from debezium_partial_snapshotter_spark.functions import bucket_id
-
-        return bucket_id(key, self.num_buckets)
-
     def bucket_plan(self, key):
         """Contract parity with LakeTable.bucket_plan: one properties
         read yields all three. While an offline rescale is pending
@@ -969,6 +964,3 @@ class IcebergTable:
         nb = self.num_buckets
         staged = df.withColumn("_bucket", bucket_id(F.col(self.bucket_key), nb))
         self.replace_buckets(staged, affected_buckets=list(range(nb)))
-
-    def to_pandas(self, spark: SparkSession):
-        return self.read(spark).toPandas()

@@ -66,7 +66,7 @@ MAX_COMMIT_KEYS = 512
 
 
 #: Tries for a lost manifest CAS (``_transact``) and for a re-plan after
-#: a guard conflict (``_rewrite_all``, ``split_bucket``).
+#: a guard conflict (``overwrite``, ``split_bucket``).
 _CAS_TRIES = 5
 _REPLAN_TRIES = 3
 
@@ -342,17 +342,14 @@ class LakeTable:
         done = ",".join(str(b) for b in sorted(rs["done"]))
         return f"{man['num_buckets']}->{rs['to']}:{done}"
 
-    def layout_token(self) -> str:
-        return self._layout_of(self.manifest())
-
     def bucket_plan(self, key: "F.Column"):
-        """(num_buckets, bucket_expr, layout_token) from ONE manifest
-        read. Appliers must take all three from here, not from separate
-        ``num_buckets``/``layout_token()`` calls: a concurrent
-        ``split_bucket`` landing between two reads would pair a STALE
-        bucket expression with the NEW layout token, so the commit-time
-        layout guard passes while rows are routed to wrong bucket
-        entries — exactly the corruption the token exists to catch."""
+        """(num_buckets, bucket expression, layout token) from ONE
+        manifest read. Appliers must take all three from here, not from
+        separate manifest reads: a concurrent ``split_bucket`` landing
+        between two reads would pair a STALE bucket expression with the
+        NEW layout token, so the commit-time layout guard passes while
+        rows are routed to wrong bucket entries — exactly the
+        corruption the token exists to catch."""
         man = self.manifest()
         return (
             man["num_buckets"],
@@ -850,84 +847,42 @@ class LakeTable:
         """
         return self._commit_files("buckets", df, affected_buckets, **commit)
 
-    def _rewrite_all(
-        self,
-        spark: SparkSession,
-        df: DataFrame | None = None,
-        num_buckets: int | None = None,
-        **commit,
-    ) -> tuple[int, bool | str]:
-        """Rewrite EVERY entry in one commit under ``num_buckets``
-        (default: the current count) and clear any in-flight
-        incremental rescale in the same commit. ``df=None`` rewrites the
-        table's own rows as read at version v and CASes on v
-        (``expected_version``: a concurrent commit re-runs the rewrite,
-        never silently drops it); a given ``df`` depends on no version,
-        so only the layout it is bucketed under must still hold. ONE
-        manifest read per attempt feeds the count, the routing and the
-        guard — separate count and routing reads would pair a stale
-        expression with fresh state (ADVICE r3). Routing
-        is always the PLAIN expression: routing with the transitional
-        one while clearing the transition would strand rows in
-        above-``nb`` entries that later merge writers never replace.
-        Returns (bucket count before, applied)."""
+    def overwrite(
+        self, df: DataFrame, new_schema: StructType | None = None
+    ) -> bool | str:
+        """Full rewrite (bootstrap loads / tiny control tables): ``df``
+        replaces EVERY entry in one commit at the current bucket count,
+        and any in-flight incremental rescale is cleared in the same
+        commit. ``df`` depends on no table version, so only the layout
+        it is bucketed under must still hold; a split landing meanwhile
+        conflicts and the rewrite is re-planned. ONE manifest read per
+        attempt feeds the count, the routing and the guard — separate
+        count and routing reads would pair a stale expression with
+        fresh state (ADVICE r3). Routing is always the PLAIN
+        expression: routing with the transitional one while clearing
+        the transition would strand rows in above-``nb`` entries that
+        later merge writers never replace."""
         for attempt in range(_REPLAN_TRIES):
             man = self.manifest()
-            old_nb = man["num_buckets"]
-            nb = old_nb if num_buckets is None else int(num_buckets)
+            nb = man["num_buckets"]
             key = man.get("bucket_key", "doc_id")
-            if df is None:
-                v = man["version"]
-                rows, guard = self.read(spark, version=v), {"expected_version": v}
-            else:
-                rows, guard = df, {"expected_layout": self._layout_of(man)}
             # cover every existing entry (an in-flight incremental
-            # rescale may have entries above both bucket counts)
+            # rescale may have entries above the bucket count)
             affected = sorted(
-                set(range(max(old_nb, nb)))
+                set(range(nb))
                 | {int(b) for b in man.get("buckets", {})}
                 | {int(b) for b in man.get("deltas", {})}
             )
             try:
-                return old_nb, self.replace_buckets(
-                    rows.withColumn("_bucket", bucket_id(F.col(key), nb)),
+                return self.replace_buckets(
+                    df.withColumn("_bucket", bucket_id(F.col(key), nb)),
                     affected,
-                    manifest_update={"rescale": None, "num_buckets": nb},
-                    **guard,
-                    **commit,
+                    new_schema=new_schema,
+                    expected_layout=self._layout_of(man),
+                    manifest_update={"rescale": None},
                 )
             except CommitConflict:
                 _retry_conflicts(attempt, _REPLAN_TRIES)
-
-    def overwrite(self, df: DataFrame, new_schema: StructType | None = None) -> None:
-        """Full rewrite (bootstrap loads / tiny control tables)."""
-        self._rewrite_all(df.sparkSession, df, new_schema=new_schema)
-
-    def rescale(
-        self,
-        spark: SparkSession,
-        new_num_buckets: int,
-        commit_key: str | None = None,
-    ) -> dict:
-        """Bucket split/merge for table growth (SCALING.md future-work
-        item, landed round 2): rewrite the table into a new bucket
-        count in ONE atomic commit — data + new ``num_buckets`` + the
-        commit key swap together, CAS'd on the version the rewrite was
-        computed from (a concurrent commit retries the whole rewrite,
-        never silently drops it). MoR deltas are resolved and folded by
-        the read. Readers pinned to older versions keep the old layout;
-        the next claim() auto-registers the new partitions in the
-        tracker (stale rows for vanished buckets are never discovered
-        again). At 100 TB this is the escape hatch when buckets outgrow
-        executor memory: double num_buckets, one table-scan-sized job."""
-        old_nb, applied = self._rewrite_all(
-            spark, num_buckets=new_num_buckets, commit_key=commit_key
-        )
-        return {
-            "applied": applied,
-            "from_buckets": old_nb,
-            "to_buckets": new_num_buckets,
-        }
 
     def begin_rescale(self, new_num_buckets: int) -> dict:
         """Open an ONLINE incremental rescale (VERDICT r2 next-4): the
@@ -940,19 +895,17 @@ class LakeTable:
         b can only move to ``b + i*nb`` — entry ids from the two
         numberings never collide, and the effective bucket function
         (``_bucket_expr_of``) is decidable per key from the ``done`` set
-        alone. Concurrent appliers capture ``layout_token()`` at plan
-        time; a split landing under them turns their commit into
-        CommitConflict -> re-bucket + re-merge (never silent
-        misplacement). Arbitrary bucket counts go through the offline
-        full-rewrite ``rescale``."""
+        alone. Concurrent appliers capture the layout token at plan
+        time (``bucket_plan``); a split landing under them turns their
+        commit into CommitConflict -> re-bucket + re-merge (never silent
+        misplacement)."""
         nb = self.num_buckets
         new = int(new_num_buckets)
         if new == nb:
             return {"applied": False, "reason": "noop"}
         if new % nb != 0 or new < nb:
             raise ValueError(
-                f"online rescale requires a multiple of {nb} (got {new}); "
-                "use rescale() for arbitrary counts"
+                f"online rescale requires a multiple of {nb} (got {new})"
             )
 
         def change(man: dict) -> dict | None:
@@ -983,9 +936,9 @@ class LakeTable:
         entry ``bucket`` (MoR deltas folded) into its ``to/nb`` child
         entries and mark it done — a bucket-sized job, CAS'd on the
         version it read, so tail batches into OTHER buckets commit
-        concurrently without conflict. At 100 TB this replaces the
-        table-sized offline rewrite with num_buckets independent
-        bucket-sized commits interleaved with live ingest."""
+        concurrently without conflict. At 100 TB a rescale is
+        num_buckets independent bucket-sized commits interleaved with
+        live ingest, never one table-sized rewrite."""
 
         b = int(bucket)
         for attempt in range(_REPLAN_TRIES):
@@ -1040,9 +993,6 @@ class LakeTable:
                 _retry_conflicts(attempt, _REPLAN_TRIES)
 
     # ------------------------------------------------------------ utility
-    def to_pandas(self, spark: SparkSession):
-        return self.read(spark).toPandas()
-
     def compact(self, spark: SparkSession) -> dict:
         """Small-file maintenance: rewrite every bucket holding >=
         ``COMPACT_MIN_FILES`` data files, or any MoR delta, into one

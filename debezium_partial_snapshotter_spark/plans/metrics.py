@@ -4,8 +4,8 @@ Reference analog: JMX snapshot/streaming beans the tests poll
 (``TestUtils.java:66-101``) and Kafka Connect offset storage
 (``AbstractTestEmbeddedEngine.java:92-96``). Here both are plain
 append-only parquet tables (one tiny file per epoch, driver-written via
-pyarrow — no Spark job for a 1-row append), readable as DataFrames for
-dashboards and by the resume path.
+pyarrow — no Spark job for a 1-row append), readable as plain parquet
+by dashboards and by the resume path (``read_pandas``).
 
 Note the exactly-once source of truth is the target manifest's
 ``commit_keys`` (atomic with data); this commit_log table is the
@@ -40,8 +40,6 @@ class AppendLog:
         )
 
     def read_pandas(self):
-        import pandas as pd
-
         files = [
             os.path.join(self.path, f)
             for f in os.listdir(self.path)
@@ -50,14 +48,6 @@ class AppendLog:
         if not files:
             return self.schema.empty_table().to_pandas()
         return pa.concat_tables([pq.read_table(f) for f in files]).to_pandas()
-
-    def to_spark(self, spark):
-        files = [f for f in os.listdir(self.path) if f.endswith(".parquet")]
-        if not files:
-            import pandas as pd
-
-            return spark.createDataFrame(self.schema.empty_table().to_pandas())
-        return spark.read.parquet(self.path)
 
 
 METRICS_ARROW = pa.schema(

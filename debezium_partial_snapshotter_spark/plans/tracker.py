@@ -22,8 +22,8 @@ The table is tiny (tables x buckets rows), so transitions run
 driver-side in pyarrow/pandas — the same decision-off-the-hot-path
 design as the reference's dedicated filter thread
 (``ThreadedSnapshotFilter.java:23-34``); executors never touch it.
-It remains a real table: ``to_spark()`` exposes it as a DataFrame and
-it broadcasts in any join against the data plane.
+It remains a real table: each version is one plain parquet file that
+any engine can read.
 """
 
 from __future__ import annotations
@@ -217,11 +217,6 @@ class SnapshotTracker:
         return self._transact(fn)
 
     # ------------------------------------------------------------- views
-    def to_spark(self, spark):
-        from debezium_partial_snapshotter_spark.schemas import TRACKER_SCHEMA
-
-        return spark.createDataFrame(self.load(), schema=TRACKER_SCHEMA)
-
     def state(self, pipeline_id: str | None = None) -> pd.DataFrame:
         df = self.load()
         if pipeline_id is not None:

@@ -12,8 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -63,45 +61,6 @@ CHANGE_EVENT_SCHEMA_V2 = StructType(
         StructField("snapshot", StringType(), True),
         StructField("table_partition", StringType(), False),
         StructField("after", TOKENS_SCHEMA_V2, True),
-    ]
-)
-
-# --- snapshot tracker control table ---
-# Generalizes the reference tracker (PostgresJdbcFilterHandler.java:21-26)
-# from per-table to per-(table,bucket) partition, with a snapshot watermark.
-TRACKER_SCHEMA = StructType(
-    [
-        StructField("table_partition", StringType(), False),
-        StructField("pipeline_id", StringType(), False),
-        StructField("needs_snapshot", BooleanType(), False),
-        StructField("under_snapshot", BooleanType(), False),
-        StructField("watermark_lsn", LongType(), True),
-        StructField("updated_epoch", LongType(), True),
-    ]
-)
-
-# --- commit log (exactly-once idempotence, keyed (pipeline_id, epoch)) ---
-COMMIT_LOG_SCHEMA = StructType(
-    [
-        StructField("pipeline_id", StringType(), False),
-        StructField("checkpoint_epoch", LongType(), False),
-        StructField("partition", StringType(), False),
-        StructField("batch_fingerprint", StringType(), True),
-        StructField("committed_at_lsn", LongType(), True),
-        StructField("rows_applied", LongType(), True),
-    ]
-)
-
-# --- metrics / lineage ---
-METRICS_SCHEMA = StructType(
-    [
-        StructField("epoch", LongType(), False),
-        StructField("partition", StringType(), False),
-        StructField("phase", StringType(), False),  # snapshot|catchup|tail
-        StructField("rows_read", LongType(), True),
-        StructField("rows_applied", LongType(), True),
-        StructField("events_per_sec", DoubleType(), True),
-        StructField("wall_ms", LongType(), True),
     ]
 )
 

@@ -59,12 +59,7 @@ def get_spark(
         # Never sort-merge-join wide token-array rows; hash joins keep
         # the hot path sort-free (the merge plan relies on this).
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # shuffle/broadcast codec knob: on a memory-bandwidth-bound box
-        # zstd trades (abundant) CPU for (scarce) bytes; lz4 default.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("DPS_IO_CODEC", "lz4"),
-        )
+        .config("spark.io.compression.codec", "lz4")
     )
     # DPS_OFFHEAP=<size>: Tungsten off-heap memory + off-heap parquet
     # column vectors — the round-3 memory-bandwidth experiment (GC was

@@ -39,7 +39,10 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from debezium_partial_snapshotter_spark.functions import bucket_id, table_partition
 from debezium_partial_snapshotter_spark.schemas import TOKENS_SCHEMA
-from debezium_partial_snapshotter_spark.sources.readers import ParquetWalSource
+from debezium_partial_snapshotter_spark.sources.readers import (
+    MAX_FILES_PER_TRIGGER,
+    ParquetWalSource,
+)
 
 
 def _nullable(schema: StructType) -> StructType:
@@ -411,10 +414,10 @@ class DebeziumJsonSource(ParquetWalSource):
             df = df.where(F.col("lsn") > F.lit(since_lsn))
         return df
 
-    def wal_stream(self, max_files_per_trigger: int = 8) -> DataFrame:
+    def wal_stream(self) -> DataFrame:
         raw = (
             self.spark.readStream.option(
-                "maxFilesPerTrigger", max_files_per_trigger
+                "maxFilesPerTrigger", MAX_FILES_PER_TRIGGER
             )
             # same suffix filter as the batch path's wal_segment_paths
             # (endswith .jsonl/.json): producers commonly write-then-

@@ -176,7 +176,7 @@ class JdbcSource:
         ).collect()[0]
         return int(row["m"]) if row["m"] is not None else -1
 
-    def wal_stream(self, max_files_per_trigger: int = 8):
+    def wal_stream(self):
         raise NotImplementedError(
             "JDBC is not a Structured Streaming source; drive the tail "
             "with tail_batch() on a scheduler, or land the change feed "

@@ -23,6 +23,9 @@ from pyspark.sql.types import StructType
 from debezium_partial_snapshotter_spark.functions import bucket_id, table_partition
 from debezium_partial_snapshotter_spark.schemas import CHANGE_EVENT_SCHEMA
 
+#: WAL segment files per streaming micro-batch (``wal_stream``).
+MAX_FILES_PER_TRIGGER = 8
+
 
 class ParquetWalSource:
     """A simulated source system: ``state_path`` holds the source table's
@@ -85,11 +88,11 @@ class ParquetWalSource:
             df = df.where(F.col("lsn") > F.lit(since_lsn))
         return df
 
-    def wal_stream(self, max_files_per_trigger: int = 8) -> DataFrame:
+    def wal_stream(self) -> DataFrame:
         """Structured Streaming file source over the log directory."""
         return (
             self.spark.readStream.schema(self.event_schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
             .parquet(self.log_dir)
         )
 

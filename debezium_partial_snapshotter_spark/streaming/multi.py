@@ -18,11 +18,11 @@ Spark re-expression of the reference connector's phase machine
    the phase machine is explicit.
 4. **tail** — bounded micro-batches, or Structured Streaming with
    ``foreachBatch`` apply (B2) over one shared feed (``stream`` routes
-   by the ``table_partition`` prefix) or one feed per table
-   (``stream_per_table``). Exactly-once = checkpoint (deterministic
-   batch replay) + idempotent commit keys in each table's manifest (B6)
-   + a per-table LSN high-watermark filter, so re-reads after
-   checkpoint loss cannot resurrect deleted keys or double-apply.
+   by the ``table_partition`` prefix). Exactly-once = checkpoint
+   (deterministic batch replay) + idempotent commit keys in each
+   table's manifest (B6) + a per-table LSN high-watermark filter, so
+   re-reads after checkpoint loss cannot resurrect deleted keys or
+   double-apply.
 
 Several tables (reference: ``PartialSnapshotterTest.java:44-46`` uses
 two; ``testFilterOneTablePartialSnapshot`` :82-102 snapshots one while
@@ -105,8 +105,9 @@ class MultiTableIngestRunner:
         )
         self._epoch = self._resume_epoch()
         self._expire_counters: dict[str, int] = {}  # per-table cadence
-        # guards the shared epoch counter and the logs when per-table
-        # streams record concurrently (driver-side scalar work only)
+        # guards the epoch counter and the logs when a stream's
+        # foreachBatch thread and a caller's thread record at once
+        # (driver-side scalar work only)
         self._lock = threading.Lock()
 
     # ----------------------------------------------- one-table overrides
@@ -413,6 +414,12 @@ class MultiTableIngestRunner:
         batch; the LSN high-watermark filter covers checkpoint-less
         re-reads. ``wal_stream_source`` names which source's log to
         stream (they share one feed; default: first table)."""
+        name = wal_stream_source or sorted(self.sources)[0]
+        if name not in self.sources:
+            raise ValueError(
+                f"wal_stream_source must be one of {sorted(self.sources)}, "
+                f"got {name!r}"
+            )
 
         def handle(batch_df: DataFrame, batch_id: int):
             self._run_epoch(
@@ -423,75 +430,16 @@ class MultiTableIngestRunner:
                 ),
             )
 
-        name = wal_stream_source or sorted(self.sources)[0]
-        return self._start_streams(
-            {name: (handle, self.cfg.checkpoint_dir)},
-            process_all_available,
-            timeout_sec,
-        )[name]
-
-    def stream_per_table(
-        self,
-        process_all_available: bool = True,
-        timeout_sec: float | None = 120.0,
-        tables: list[str] | None = None,
-    ) -> dict:
-        """Tables with INDEPENDENT change logs stream concurrently
-        (VERDICT r2 next-6): one readStream per table over that table's
-        own feed, each with its own checkpoint subdirectory, all
-        applying in parallel on the driver's streaming threads.
-
-        Exactly-once per table is unchanged — batch ids are scoped to
-        each query's checkpoint and the commit key
-        ``pid:pstream:{batch_id}:{table}`` per table. The shared epoch
-        counter and the logs are the only cross-table state;
-        ``_run_epoch`` records under one lock (driver-side scalar work —
-        the data plane never serializes on it).
-
-        Returns {table: StreamingQuery}; with ``process_all_available``
-        each query is drained (availableNow) before returning."""
-
-        def make_handle(t: str):
-            def handle(batch_df: DataFrame, batch_id: int):
-                # distinct namespace from the shared-feed stream()'s
-                # "stream" keys: the two modes run over INDEPENDENT
-                # checkpoints, so their batch ids both start at 0 — a
-                # shared format would make a fresh per-table batch
-                # collide with an old shared-feed commit and be
-                # silently skipped (data loss on mode switch)
-                self._run_epoch(
-                    "tail",
-                    [(t, self._wal_events(t, batch_df), self._key("pstream", batch_id, t))],
-                )
-
-            return handle
-
-        return self._start_streams(
-            {
-                t: (make_handle(t), f"{self.cfg.checkpoint_dir}/{t}")
-                for t in sorted(tables or self.sources)
-            },
-            process_all_available,
-            timeout_sec,
-        )
-
-    def _start_streams(
-        self, handles: dict, process_all_available: bool, timeout_sec: float | None
-    ) -> dict:
-        """One availableNow query per ``{source: (handle, checkpoint)}``."""
-        queries = {
-            t: self.sources[t]
-            .wal_stream(self.cfg.max_files_per_trigger)
+        q = (
+            self.sources[name]
+            .wal_stream()
             .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint)
+            .option("checkpointLocation", self.cfg.checkpoint_dir)
             .trigger(availableNow=True)
             .start()
-            for t, (handle, checkpoint) in handles.items()
-        }
+        )
         if process_all_available:
-            for q in queries.values():
-                q.awaitTermination(timeout_sec)
-            for q in queries.values():
-                if q.isActive:
-                    q.stop()
-        return queries
+            q.awaitTermination(timeout_sec)
+            if q.isActive:
+                q.stop()
+        return q

@@ -37,7 +37,7 @@ class PartialIngestRunner(MultiTableIngestRunner):
         """``table`` swaps the sink: any object implementing the
         LakeTable contract (tests/test_sink_contract.py pins it) —
         e.g. plans.iceberg.IcebergTable on a real cluster. Default:
-        a LakeTable under cfg.target_path."""
+        a LakeTable under ``{warehouse}/{target_table}``."""
         t = cfg.target_table
         super().__init__(
             spark, cfg, {t: source}, payload_schema,

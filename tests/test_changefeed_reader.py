@@ -795,13 +795,18 @@ def test_cursor_seq_chain_is_garbage_collected(spark, tmp_warehouse):
         r.commit(b)
 
 
-def test_far_behind_cursor_skips_manifest_walk(spark, tmp_warehouse):
-    """VERDICT r6 item 4: a cursor more than max_delta_epochs behind
+def test_far_behind_cursor_skips_manifest_walk(
+    spark, tmp_warehouse, monkeypatch
+):
+    """VERDICT r6 item 4: a cursor more than MAX_DELTA_EPOCHS behind
     must not pay one driver-side manifest read per epoch before the
     fallback."""
+    from debezium_partial_snapshotter_spark.plans import changefeed
+
     table, vs = _build(spark, tmp_warehouse)
     cdir = os.path.join(tmp_warehouse, "cursor_cap")
-    r = ChangefeedReader(table, cdir, max_delta_epochs=2)
+    monkeypatch.setattr(changefeed, "MAX_DELTA_EPOCHS", 2)
+    r = ChangefeedReader(table, cdir)
     r.start(from_version=vs[0])
 
     def no_walk(*a, **k):

@@ -14,8 +14,17 @@ import pyarrow.parquet as pq
 import pytest
 
 from debezium_partial_snapshotter_spark.config import PipelineConfig
+from debezium_partial_snapshotter_spark.operators.upsert import (
+    apply_batch,
+    empty_table_for,
+)
 from debezium_partial_snapshotter_spark.plans import lake
+from debezium_partial_snapshotter_spark.plans.changefeed import ChangefeedReader
 from debezium_partial_snapshotter_spark.plans.lake import VersionExpiredError
+from debezium_partial_snapshotter_spark.schemas import (
+    CHANGE_EVENT_SCHEMA,
+    TOKENS_SCHEMA,
+)
 from debezium_partial_snapshotter_spark.sources.eventlog import (
     EventLogSpec,
     generate_change_log,
@@ -218,54 +227,6 @@ def test_multi_table_crash_resumes_same_epoch(spark, tmp_warehouse, monkeypatch)
     st = runner2.tracker.state(cfg.pipeline_id)
     assert not st["under_snapshot"].any()
 
-def test_multi_table_stream_per_table_separate_feeds(spark, tmp_warehouse):
-    """Tables with INDEPENDENT change logs (one readStream each,
-    per-table checkpoints) stream concurrently to the right tables
-    with per-table exactly-once (VERDICT r2 next-6)."""
-    wh = tmp_warehouse
-    specs, states, sources = {}, {}, {}
-    for t, (seed, lsn0) in TABLES.items():
-        spec = EventLogSpec(
-            n_docs=50, n_events=200, n_segments=2, seed=seed,
-            num_buckets=NB, table=t, start_lsn=lsn0,
-        )
-        specs[t] = spec
-        states[t] = generate_initial_state(spec)
-        state_path = os.path.join(wh, "source", f"{t}.parquet")
-        write_state(state_path, states[t])
-        log_dir = os.path.join(wh, "source", f"wal_{t}")  # DISJOINT dirs
-        os.makedirs(log_dir)
-        sources[t] = ParquetWalSource(
-            spark, state_path, log_dir, table=t, num_buckets=NB
-        )
-
-    runner, cfg = _runner(spark, wh, sources)
-    assert runner.start()["snapshot"]["applied"]
-
-    # each table's events land ONLY in its own feed
-    for t, spec in specs.items():
-        for i, seg in enumerate(generate_change_log(spec)):
-            pq.write_table(
-                seg, os.path.join(sources[t].log_dir, f"seg-{i:05d}.parquet")
-            )
-
-    queries = runner.stream_per_table(timeout_sec=180)
-    assert set(queries) == set(TABLES)
-    for t, spec in specs.items():
-        expected = oracle_apply(
-            [snapshot_read_events(states[t], spec.start_lsn, spec)]
-            + generate_change_log(spec)
-        )
-        assert_state_matches(spark, runner.tables[t], expected)
-        assert runner.tables[t].watermark_lsn() == max(
-            r["lsn"] for tab in generate_change_log(spec) for r in tab.to_pylist()
-        )
-
-    # draining again from the same checkpoints is a per-table no-op
-    versions = {t: runner.tables[t].current_version() for t in TABLES}
-    runner.stream_per_table(timeout_sec=180)
-    assert {t: runner.tables[t].current_version() for t in TABLES} == versions
-
 
 def test_multi_table_surfaces_quarantine_counts(spark, tmp_warehouse):
     """The wal phases report per-table rows_quarantined for sources
@@ -338,3 +299,55 @@ def test_multi_table_snapshot_epoch_expires(spark, tmp_warehouse):
     for t in TABLES:
         assert "expiration" in tail[t], tail[t]
         assert_state_matches(spark, runner.tables[t], _expected(specs, states, t))
+
+
+def _config(spark, wh, **kw):
+    return PipelineConfig(**kw)
+
+
+def _apply_one(spark, wh, **kw):
+    table = empty_table_for(os.path.join(wh, "t"), TOKENS_SCHEMA, NB)
+    events = spark.createDataFrame(
+        [("u", "k1", 1, "false", "alpha/0000", ("k1", [1], 1, "s"))],
+        CHANGE_EVENT_SCHEMA,
+    )
+    return apply_batch(table, events, commit_key="v:0", **kw)
+
+
+def _poll_empty(spark, wh, **kw):
+    table = empty_table_for(os.path.join(wh, "t"), TOKENS_SCHEMA, NB)
+    reader = ChangefeedReader(table, os.path.join(wh, "cursor"))
+    reader.start()
+    return reader.poll(spark, **kw)
+
+
+def _stream(spark, wh, **kw):
+    runner, _ = _runner(spark, wh, {"alpha": None})
+    return runner.stream(**kw)
+
+
+@pytest.mark.parametrize(
+    "call, kw, allowed",
+    [
+        (_config, {"write_mode": "MoR"}, "'cow' or 'mor'"),
+        (_config, {"on_tracker_error": "Fail"}, "'skip', 'snapshot' or 'fail'"),
+        (_apply_one, {"write_mode": "MoR"}, "'cow' or 'mor'"),
+        (_apply_one, {"watermark_kind": "WAL"}, "'wal' or 'snapshot'"),
+        (_poll_empty, {"on_ineligible": "raise"}, "'net' or 'error'"),
+        (_stream, {"wal_stream_source": "nope"}, r"one of \['alpha'\]"),
+    ],
+    ids=[
+        "config-write_mode", "config-on_tracker_error", "apply-write_mode",
+        "apply-watermark_kind", "poll-on_ineligible", "stream-wal_stream_source",
+    ],
+)
+def test_misspelt_choice_raises(spark, tmp_warehouse, call, kw, allowed):
+    """A misspelt choice raises ValueError naming the allowed values.
+    Accepted, each would silently take another path:
+    ``write_mode="MoR"`` would run CoW, ``on_tracker_error="Fail"``
+    would skip the snapshot, ``watermark_kind="WAL"`` would advance
+    snapshot_lsn and leave the WAL watermark behind, and an unknown
+    ``on_ineligible`` would fall back to the net resolve; an unknown
+    stream source would die with a bare KeyError."""
+    with pytest.raises(ValueError, match=allowed):
+        call(spark, tmp_warehouse, **kw)

@@ -114,6 +114,3 @@ def test_multimodal_plumbing(spark, docs):
     vids = meta[meta.kind == "video"]
     assert len(frames) == 4 * len(vids)
     assert frames.frame_md5.str.len().eq(32).all()
-
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(media)

@@ -1,5 +1,7 @@
-"""Bucket split/merge (LakeTable.rescale) — the table-growth escape
-hatch: one atomic commit swaps data, num_buckets, and the commit key.
+"""Online incremental rescale (LakeTable.begin_rescale + split_bucket)
+— the table-growth path: one bucket per commit while applies keep
+landing, the last split finalizing num_buckets — and the full rewrite
+(``overwrite``) that clears an in-flight rescale.
 """
 
 import os
@@ -32,71 +34,14 @@ def _events(spark, rows):
     return spark.createDataFrame(data, CHANGE_EVENT_SCHEMA)
 
 
-def test_rescale_preserves_data_and_pruning(spark, tmp_warehouse):
-    t = empty_table_for(os.path.join(tmp_warehouse, "t"), TOKENS_SCHEMA, 4)
-    rows = [("u", f"k{i}", 100 + i) for i in range(40)]
-    assert apply_batch(t, _events(spark, rows), commit_key="p:0")["applied"]
-    before = {r["doc_id"]: r["_lsn"] for r in t.read(spark).collect()}
-
-    out = t.rescale(spark, 8, commit_key="p:rescale:0")
-    assert out["applied"] is True and out["to_buckets"] == 8
-    assert t.num_buckets == 8
-    after = {r["doc_id"]: r["_lsn"] for r in t.read(spark).collect()}
-    assert after == before
-
-    # pruning follows the NEW bucket function
-    b = bucket_id_py("k1", 8)
-    pruned = {r["doc_id"] for r in t.read(spark, buckets=[b]).collect()}
-    assert "k1" in pruned
-    assert all(bucket_id_py(d, 8) == b for d in pruned)
-
-    # the engine keeps applying with the new layout
-    assert apply_batch(
-        t, _events(spark, [("u", "k1", 999), ("d", "k2", 1000)]), commit_key="p:1"
-    )["applied"]
-    got = {r["doc_id"]: r["_lsn"] for r in t.read(spark).collect()}
-    assert got["k1"] == 999 and "k2" not in got
-
-    # rescale is idempotent under redelivery of its commit key
-    v = t.current_version()
-    assert t.rescale(spark, 8, commit_key="p:rescale:0")["applied"] is False
-    assert t.current_version() == v
-
-
-def test_rescale_folds_mor_deltas(spark, tmp_warehouse):
-    t = empty_table_for(os.path.join(tmp_warehouse, "t2"), TOKENS_SCHEMA, 4)
-    apply_batch(t, _events(spark, [("u", "a", 1), ("u", "b", 2)]), commit_key="x:0")
-    apply_batch(
-        t,
-        _events(spark, [("u", "a", 3), ("d", "b", 4)]),
-        commit_key="x:1",
-        write_mode="mor",
-    )
-    assert t.delta_stats()["delta_files"] > 0
-    t.rescale(spark, 2, commit_key="x:rescale")
-    assert t.num_buckets == 2
-    assert t.delta_stats()["delta_files"] == 0  # folded by the rewrite
-    got = {r["doc_id"]: r["_lsn"] for r in t.read(spark).collect()}
-    assert got == {"a": 3}  # winner kept, tombstone dropped
-
-
-def test_shrink_removes_stale_buckets(spark, tmp_warehouse):
-    t = empty_table_for(os.path.join(tmp_warehouse, "t3"), TOKENS_SCHEMA, 8)
-    rows = [("u", f"z{i}", 10 + i) for i in range(30)]
-    apply_batch(t, _events(spark, rows), commit_key="s:0")
-    t.rescale(spark, 4, commit_key="s:rescale")
-    man = t.manifest()
-    assert man["num_buckets"] == 4
-    assert all(int(b) < 4 for b in man["buckets"])  # buckets 4..7 gone
-    assert t.read(spark).count() == 30
-
-
 def test_apply_rebuckets_on_concurrent_rescale(spark, tmp_warehouse):
-    """A rescale landing between an apply's read and its commit must NOT
-    let stale-bucketed rows commit (they would land in partitions that
-    disagree with the new bucket function and vanish from pruned
-    reads); apply_batch must conflict and re-merge under the new
-    layout."""
+    """A rescale changing the bucket COUNT between an apply's read and
+    its commit must NOT let stale-bucketed rows commit (they would land
+    in partitions that disagree with the new bucket function and vanish
+    from pruned reads); apply_batch must conflict and re-merge under
+    the new layout. Here the count change is the finalizing split of
+    an online rescale: buckets 0-2 are split before the apply plans,
+    and bucket 3's split (4 -> 8 buckets) lands inside its commit."""
     from debezium_partial_snapshotter_spark.plans.lake import LakeTable
 
     path = os.path.join(tmp_warehouse, "t4")
@@ -105,6 +50,9 @@ def test_apply_rebuckets_on_concurrent_rescale(spark, tmp_warehouse):
         table, _events(spark, [("u", f"k{i}", 10 + i) for i in range(12)]),
         commit_key="p:0",
     )
+    assert table.begin_rescale(8)["applied"]
+    for b in range(3):
+        assert table.split_bucket(spark, b, commit_key=f"p:split:{b}")["applied"]
 
     other = LakeTable(path)
     orig = table.replace_buckets
@@ -113,7 +61,8 @@ def test_apply_rebuckets_on_concurrent_rescale(spark, tmp_warehouse):
     def hook(*a, **kw):
         if fired["n"] == 0:
             fired["n"] = 1
-            other.rescale(spark, 8, commit_key="p:rescale")
+            out = other.split_bucket(spark, 3, commit_key="p:split:3")
+            assert out["finalized"] and other.num_buckets == 8
         return orig(*a, **kw)
 
     table.replace_buckets = hook
@@ -122,7 +71,7 @@ def test_apply_rebuckets_on_concurrent_rescale(spark, tmp_warehouse):
         commit_key="p:1",
     )
     table.replace_buckets = orig
-    assert stats["applied"] is True
+    assert stats["applied"] is True and stats["retries"] == 1
     assert table.num_buckets == 8
 
     # every row must be findable through NEW-layout bucket pruning
